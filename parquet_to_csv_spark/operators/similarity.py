@@ -586,8 +586,6 @@ def kmeans_iterations(
 # query path never re-derives centroids — exactly this split.
 # ---------------------------------------------------------------------------
 
-_IVF_CACHE: dict[tuple[str, int, int], str] = {}
-
 
 def build_ivf_index(
     spark: SparkSession,
@@ -687,18 +685,11 @@ def _ivf_index_dir(
     # mid-process invalidates the cached index; md5 path names are
     # process-stable (Python hash() is salted per process)
     salt = source_salt(sf_dir, "embeddings")
-    key = (salt, n_cells, n_iter)
-    import os
 
-    path = _IVF_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
+    def _build(stage: str) -> None:
+        build_ivf_index(spark, sf_dir, stage, n_cells=n_cells, n_iter=n_iter)
 
-        def _build(stage: str) -> None:
-            build_ivf_index(spark, sf_dir, stage, n_cells=n_cells, n_iter=n_iter)
-
-        path = claim_artifact(spark, f"ivf_c{n_cells}_i{n_iter}_{salt}", _build)
-        _IVF_CACHE[key] = path
-    return path
+    return claim_artifact(spark, f"ivf_c{n_cells}_i{n_iter}_{salt}", _build)
 
 
 def ivf_indexed_topk(
@@ -2983,9 +2974,6 @@ def rbo_rank_agreement(
     )
 
 
-_IVF_APPEND_CACHE: dict[tuple, str] = {}
-
-
 def ivf_index_append_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -3010,26 +2998,26 @@ def ivf_index_append_topk(
     (base-filtered Lloyd build + full-corpus assignment). What drifts
     after an append is the CENTROIDS' fit, not the assignment — E298's
     staleness report prices the rebuild decision.
+
+    The appended index (base build + delta append) is one
+    ``layout.claim_artifact`` entry: it commits only after the append,
+    so no process ever serves a base-only index.
     """
     import os
-    import tempfile
 
     from parquet_to_csv_spark.operators.corpus import md5_bucket
+    from parquet_to_csv_spark.sources.layout import claim_artifact
     from parquet_to_csv_spark.sources.tables import source_salt
 
     salt = source_salt(sf_dir, "embeddings")
     dim = _emb_dim(spark, sf_dir)
-    key = (salt, n_cells, delta_buckets)
-    path = _IVF_APPEND_CACHE.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="ivf_append_"), f"idx_{salt}"
-        )
+
+    def _build(stage: str) -> None:
         base_pred = md5_bucket(F.col("vec_id"), delta_buckets) != 0
         build_ivf_index(
-            spark, sf_dir, path, n_cells=n_cells, n_iter=2, where=base_pred
+            spark, sf_dir, stage, n_cells=n_cells, n_iter=2, where=base_pred
         )
-        cents_t = spark.read.parquet(os.path.join(path, "centroids"))
+        cents_t = spark.read.parquet(os.path.join(stage, "centroids"))
         delta = (
             load_table(spark, sf_dir, "embeddings")
             .select(
@@ -3052,9 +3040,12 @@ def ivf_index_append_topk(
                 )
             )
             .write.mode("append")
-            .parquet(os.path.join(path, "assignments"))
+            .parquet(os.path.join(stage, "assignments"))
         )
-        _IVF_APPEND_CACHE[key] = path
+
+    path = claim_artifact(
+        spark, f"ivf_append_c{n_cells}_b{delta_buckets}_{salt}", _build
+    )
     return ivf_indexed_topk(
         spark,
         sf_dir,

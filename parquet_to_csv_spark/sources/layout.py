@@ -1792,9 +1792,6 @@ def schema_drift(
     }
 
 
-_DELTA_TABLE_CACHE: dict[str, str] = {}
-
-
 def read_version_delta(
     spark: SparkSession, table_dir: str, from_version: int, to_version: int
 ) -> DataFrame:
@@ -1853,33 +1850,29 @@ def read_version_delta(
 
 
 def snapshot_delta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT E374 gate query: build (once per process, content-salted) a
-    three-version snapshot table from deterministic thirds of
-    ``orders`` (v0: orderkey%3==0, +v1: %3==1, +v2: %3==2), then
-    consume v1→v2 INCREMENTALLY via :func:`read_version_delta` and
-    digest the delta rows. The oracle recomputes the %3==2 slice from
-    the raw table — the digest matches only if the manifest set
-    difference yields exactly the appended rows (no base re-read, no
-    loss at the version boundary)."""
-    import os
-    import tempfile
-
+    """EXT E374 gate query: build (once per content salt, through
+    :func:`claim_artifact`) a three-version snapshot table from
+    deterministic thirds of ``orders`` (v0: orderkey%3==0, +v1: %3==1,
+    +v2: %3==2), then consume v1→v2 INCREMENTALLY via
+    :func:`read_version_delta` and digest the delta rows. The oracle
+    recomputes the %3==2 slice from the raw table — the digest matches
+    only if the manifest set difference yields exactly the appended
+    rows (no base re-read, no loss at the version boundary)."""
     from pyspark.sql import functions as F
 
     from parquet_to_csv_spark.sources.tables import load_table, source_salt
 
-    salt = source_salt(sf_dir, "orders")
-    if salt not in _DELTA_TABLE_CACHE:
-        tdir = os.path.join(
-            tempfile.mkdtemp(prefix="snap_delta_"), f"orders_{salt}"
-        )
+    def _build(stage: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         for k in (0, 1, 2):
             commit_version(
-                spark, tdir, orders.filter(F.col("o_orderkey") % 3 == k)
+                spark, stage, orders.filter(F.col("o_orderkey") % 3 == k)
             )
-        _DELTA_TABLE_CACHE[salt] = tdir
-    delta = read_version_delta(spark, _DELTA_TABLE_CACHE[salt], 1, 2)
+
+    tdir = claim_artifact(
+        spark, "snap_delta_" + source_salt(sf_dir, "orders"), _build
+    )
+    delta = read_version_delta(spark, tdir, 1, 2)
     return delta.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").alias("key_sum"),
@@ -2118,15 +2111,13 @@ def clustering_depth_report(
     )
 
 
-_WIDE_CACHE: dict[str, str] = {}
-
-
 def denormalized_serving_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT E411: denormalize-once / serve-many — the star-schema
     flattening a 100 TB serving layer does so that per-query joins
     disappear. The wide table (orders ⋈ customer ⋈ nation ⋈ region,
-    dims broadcast) is MATERIALIZED to parquet once per process
-    (content-salted, the dedup_edges discipline); the report is then a
+    dims broadcast) is MATERIALIZED to parquet once through
+    :func:`claim_artifact`, keyed by the content salts of all four
+    joined tables (the dedup_edges discipline); the report is then a
     pure scan of the wide artifact — projection pruned to 4 of its
     columns, zero joins at query time.
 
@@ -2136,16 +2127,11 @@ def denormalized_serving_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out, misaligned dim version — shifts the hash. That is exactly
     the parity a serving-table deployment must re-verify after every
     rebuild."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from parquet_to_csv_spark.sources.tables import load_table, source_salt
 
-    salt = source_salt(sf_dir, "orders")
-    path = _WIDE_CACHE.get(salt)
-    if path is None or not os.path.isdir(path):
+    def _build(stage: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         cust = load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_mktsegment", "c_nationkey"
@@ -2171,12 +2157,12 @@ def denormalized_serving_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("r_name").alias("region"),
             )
         )
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="wide_orders_"), f"w_{salt}"
-        )
-        wide.write.mode("overwrite").parquet(path)
-        _WIDE_CACHE[salt] = path
-    w = spark.read.parquet(path)
+        wide.write.parquet(stage)
+
+    salts = "_".join(
+        source_salt(sf_dir, t) for t in ("orders", "customer", "nation", "region")
+    )
+    w = spark.read.parquet(claim_artifact(spark, "wide_orders_" + salts, _build))
     return w.groupBy("region", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(

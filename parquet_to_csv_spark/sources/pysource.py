@@ -250,9 +250,6 @@ class CounterStreamDataSource(DataSource):
         return CounterStreamReader(self.options)
 
 
-_STREAM_DIGEST_CACHE: dict[tuple[int, int], str] = {}
-
-
 def python_stream_digest(spark, sf_dir: str, n_rows: int = 3000, step: int = 1000):
     """EXT E371 gate query: drain the Python streaming source through a
     real ``writeStream`` (parquet sink + checkpoint — the durable
@@ -262,35 +259,36 @@ def python_stream_digest(spark, sf_dir: str, n_rows: int = 3000, step: int = 100
     offset-advance bug (skipped range, double-read on the batch
     boundary, replay drift) breaks the exact id/value sums. ``sf_dir``
     unused (generated workload; uniform registry signature); the
-    drained parquet is memoized per (n_rows, step) per process —
+    drained parquet and its checkpoint land in one
+    ``layout.claim_artifact`` stage keyed by (n_rows, step) —
     build-once/serve-many, like every other staged artifact here.
     """
-    import tempfile
+    import os
 
     from pyspark.sql import functions as F
 
-    key = (n_rows, step)
-    if key not in _STREAM_DIGEST_CACHE:
+    from parquet_to_csv_spark.sources.layout import claim_artifact
+
+    def _build(stage: str) -> None:
         spark.dataSource.register(CounterStreamDataSource)
-        out = tempfile.mkdtemp(prefix="pystream_out_")
-        ckpt = tempfile.mkdtemp(prefix="pystream_ckpt_")
         q = (
             spark.readStream.format("counter_stream")
             .option("n_rows", n_rows)
             .option("step", step)
             .load()
             .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
+            .option("path", os.path.join(stage, "out"))
+            .option("checkpointLocation", os.path.join(stage, "ckpt"))
             .start()
         )
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-        _STREAM_DIGEST_CACHE[key] = out
+
+    stage = claim_artifact(spark, f"pystream_n{n_rows}_s{step}", _build)
     landed = spark.read.schema("id bigint, v bigint").parquet(
-        _STREAM_DIGEST_CACHE[key]
+        os.path.join(stage, "out")
     )
     return landed.groupBy((F.col("v") % 10).alias("bucket")).agg(
         F.count(F.lit(1)).alias("n"),

@@ -122,31 +122,22 @@ def run_to_memory(
     return spark.table(table_name)
 
 
-_STAGE_CACHE: dict[tuple, str] = {}
-
-
 def _staged_once(spark: SparkSession, sf_dir: str, table: str, prefix: str, write_fn) -> str:
     """Build-once staging (round-4, verdict #8): the drain harness
     previously re-wrote the staged source per query — ~21 s of the
     sf0.1 bench spent writing the SAME events parquet again and again.
-    Staging dirs are now memoized per (prefix, content salt of the
-    source table), the dedup_edges discipline: first drain in the
-    process writes, later drains list-and-read. Each streaming query
-    still gets its own checkpoint/sink, so sharing the input dir does
-    not couple their offsets; the content salt invalidates the staging
-    when the fixture is rewritten in-process."""
-    import os
-    import tempfile
-
+    Each staging dir is a ``layout.claim_artifact`` entry keyed by
+    (prefix, content salt of the source table): the first drain writes
+    ``write_fn(stage)`` into a fresh, not-yet-existing stage directory,
+    later drains in any process list-and-read, and a reaped directory
+    is rebuilt. Each streaming query still gets its own
+    checkpoint/sink, so sharing the input dir does not couple their
+    offsets; the content salt invalidates the staging when the fixture
+    is rewritten."""
+    from parquet_to_csv_spark.sources.layout import claim_artifact
     from parquet_to_csv_spark.sources.tables import source_salt
 
-    key = (prefix, source_salt(sf_dir, table))
-    path = _STAGE_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        path = tempfile.mkdtemp(prefix=prefix)
-        write_fn(path)
-        _STAGE_CACHE[key] = path
-    return path
+    return claim_artifact(spark, prefix + source_salt(sf_dir, table), write_fn)
 
 
 def _stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -285,7 +276,6 @@ def dedup_drain_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWICE (every row a duplicate), streamed through
     ``streaming_dedup``, and drained — the surviving set must equal
     the plain batch DISTINCT of the single copy."""
-    import tempfile
     import uuid as _uuid
 
     from parquet_to_csv_spark.sources.tables import load_table
@@ -567,8 +557,6 @@ def _stage_docs_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage ``documents`` as a file-stream source directory (the E304
     ingest shape: docs arrive as files, hygiene runs before anything
     else sees them)."""
-    import tempfile
-
     from parquet_to_csv_spark.sources.tables import load_table
 
     return _staged_once(
@@ -908,6 +896,7 @@ def _stage_latedrop_dirs(spark: SparkSession, sf_dir: str) -> str:
     from parquet_to_csv_spark.sources.tables import load_table
 
     def _write(p: str) -> None:
+        os.makedirs(p)
         ev = load_table(spark, sf_dir, "events")
         bounds = F.broadcast(
             ev.agg(F.min("ts").alias("t0"), F.max("ts").alias("t3"))
@@ -1219,7 +1208,7 @@ def streaming_merge_sink_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from parquet_to_csv_spark.sources import layout
-    from parquet_to_csv_spark.sources.tables import load_table, source_salt
+    from parquet_to_csv_spark.sources.tables import load_table
     from parquet_to_csv_spark.functions.stable import exact_units
 
     def _build(stage: str) -> None:
@@ -1243,14 +1232,12 @@ def streaming_merge_sink_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _merge(batch_df: DataFrame, batch_id: int) -> None:
             layout.merge_into(spark, tdir, batch_df, "event_id")
 
-        import tempfile
-
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
             q = (
                 stream.writeStream.foreachBatch(_merge)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ms_ckpt_"))
+                .option("checkpointLocation", os.path.join(stage, "ckpt"))
                 .trigger(availableNow=True)
                 .start()
             )

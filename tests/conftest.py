@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -27,3 +28,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def art_root(spark, tmp_path):
+    """A fresh, test-private artifact root for ``claim_artifact``."""
+    root = str(tmp_path / "artifacts")
+    spark.conf.set("spark.graft.artifactDir", root)
+    try:
+        yield root
+    finally:
+        spark.conf.unset("spark.graft.artifactDir")
+
+
+@pytest.fixture()
+def committed_dir(spark):
+    """``committed_dir(key)``: the directory ``layout.claim_artifact``
+    committed for ``key``, read from ``<artifact_root>/<key>/DONE.json``."""
+    from parquet_to_csv_spark.sources.layout import artifact_root
+
+    def _dir(key: str) -> str:
+        with open(os.path.join(artifact_root(spark), key, "DONE.json")) as f:
+            return json.load(f)["dir"]
+
+    return _dir

@@ -25,16 +25,6 @@ from parquet_to_csv_spark.sources.layout import claim_artifact
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.fixture()
-def art_root(spark, tmp_path):
-    root = str(tmp_path / "artifacts")
-    spark.conf.set("spark.graft.artifactDir", root)
-    try:
-        yield root
-    finally:
-        spark.conf.unset("spark.graft.artifactDir")
-
-
 def test_build_once_then_serve(spark, art_root):
     calls = []
 
@@ -128,7 +118,6 @@ print("EDGE_COUNT", n)
     stages_before = sorted(os.listdir(adir))
 
     # this process must SERVE that build: same count, no new stage dir
-    dedup._EDGE_CACHE.clear()
     n_here = dedup.dedup_edges(spark, SF_DIR, 0.8).count()
     assert n_here == n_proc1
     assert sorted(os.listdir(adir)) == stages_before

@@ -29,15 +29,14 @@ def test_dedup_edges_identical_to_direct_build(spark, sf_dir):
     assert served == direct and len(served) > 0
 
 
-def test_dedup_edges_builds_once_and_superset_serves(spark, sf_dir):
-    # the cache is process-global: the first test (or an earlier suite
-    # module) already built at the workload floor for this sf_dir
+def test_dedup_edges_builds_once_and_superset_serves(spark, sf_dir, committed_dir):
+    # every threshold at or above the workload floor is served from the
+    # one build committed at the floor for this corpus salt
     from parquet_to_csv_spark.sources.tables import source_salt
 
     salt = source_salt(sf_dir, "documents")
-    key = (salt, int(round(dedup._BUILD_FLOOR * 10000)))
-    assert key in dedup._EDGE_CACHE
-    path = dedup._EDGE_CACHE[key]
+    dedup.dedup_edges(spark, sf_dir, 0.8)
+    path = committed_dir(f"edges_t{int(round(dedup._BUILD_FLOOR * 10000))}_{salt}")
     mtime = max(
         os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
     )
@@ -57,7 +56,7 @@ def test_dedup_edges_builds_once_and_superset_serves(spark, sf_dir):
     served = _rows(dedup.dedup_edges(spark, sf_dir, 0.9))
     n_dirs_after = len([d for d in os.listdir(root) if d.startswith("edges_")])
     assert n_dirs_after == n_dirs_before
-    assert (salt, 9000) not in dedup._EDGE_CACHE
+    assert not os.path.exists(os.path.join(root, f"edges_t9000_{salt}"))
     direct = _rows(dedup.ngram_jaccard_pairs(spark, sf_dir, 0.9))
     assert served == direct
 

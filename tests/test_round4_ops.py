@@ -595,16 +595,17 @@ def test_collated_counts_merge_case_forms(spark, sf_dir):
     assert any(r["n_forms"] == 2 for r in rows)
 
 
-def test_snapshot_delta_scan_incremental_only(spark, sf_dir):
+def test_snapshot_delta_scan_incremental_only(spark, sf_dir, committed_dir):
     """Delta v1->v2 contains exactly the appended third, and the delta
     read plans a scan of ONLY the v2 data files."""
     from parquet_to_csv_spark.sources import layout
+    from parquet_to_csv_spark.sources.tables import source_salt
 
     rows = layout.snapshot_delta_scan(spark, sf_dir).collect()
     orders = load_table(spark, sf_dir, "orders")
     want = orders.filter(F.col("o_orderkey") % 3 == 2).count()
     assert sum(r["n_orders"] for r in rows) == want
-    tdir = next(iter(layout._DELTA_TABLE_CACHE.values()))
+    tdir = committed_dir("snap_delta_" + source_salt(sf_dir, "orders"))
     delta = layout.read_version_delta(spark, tdir, 1, 2)
     files = {
         r["f"] for r in delta.select(
@@ -931,16 +932,17 @@ def test_fs_em_separates_matches(spark, sf_dir):
     assert 0 < full["p_micro"] < 500_000
 
 
-def test_ivf_append_matches_full_assignment(spark, sf_dir):
+def test_ivf_append_matches_full_assignment(spark, sf_dir, committed_dir):
     """The appended index == assign-everything-to-base-centroids, and
     the assignments relation physically contains base + delta files."""
     from parquet_to_csv_spark.operators import similarity as sim
     from parquet_to_csv_spark.operators.corpus import md5_bucket
+    from parquet_to_csv_spark.sources.tables import source_salt
 
     out = sim.ivf_index_append_topk(spark, sf_dir).collect()
     assert len(out) == 25  # 5 queries x top-5
     # the persisted assignments cover EVERY vector exactly once
-    path = next(iter(sim._IVF_APPEND_CACHE.values()))
+    path = committed_dir("ivf_append_c16_b5_" + source_salt(sf_dir, "embeddings"))
     import os
     assign = spark.read.parquet(os.path.join(path, "assignments"))
     emb = load_table(spark, sf_dir, "embeddings")

@@ -33,16 +33,6 @@ from parquet_to_csv_spark.sources.layout import claim_artifact
 from parquet_to_csv_spark.sources.tables import load_table
 
 
-@pytest.fixture()
-def art_root(spark, tmp_path):
-    root = str(tmp_path / "artifacts")
-    spark.conf.set("spark.graft.artifactDir", root)
-    try:
-        yield root
-    finally:
-        spark.conf.unset("spark.graft.artifactDir")
-
-
 # --- 1. CDC feed: deletes binding to files appended inside the window
 
 

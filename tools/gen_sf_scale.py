@@ -12,9 +12,9 @@ not rigged:
   distribution and fan-out while growing joins/aggregations k×;
   timestamps are kept, so per-day volume grows k× (a scale-up, not a
   longer history);
-- documents uses the SPLICE method validated by tools/scale_probe.py
-  (round 5): copy c>0 of doc i keeps (lang, source) but takes the
-  first half of doc i's tokens + the second half of doc (i+c mod N)'s
+- documents uses the SPLICE method validated by the round-5 scale
+  probe (see SCALE.md): copy c>0 of doc i keeps (lang, source) but
+  takes the first half of doc i's tokens + the second half of doc (i+c mod N)'s
   tokens — the global vocabulary is preserved, every token's corpus
   frequency scales ×k (the exact stress shared-vocab posting lists
   must survive), and spliced copies are only ~1/3-similar to their
