@@ -536,7 +536,7 @@ def test_xml_roundtrip_lossless(spark, sf_dir):
         assert r["n_distinct_md5"] == e["n_distinct_md5"]
 
 
-def test_python_stream_digest_matches_formula(spark, sf_dir):
+def test_python_stream_digest_matches_formula(spark, sf_dir, art_root):
     """The drained stream equals the arithmetic replay: no skipped or
     double-read offset ranges across micro-batch boundaries."""
     from parquet_to_csv_spark.sources.pysource import python_stream_digest
@@ -595,7 +595,9 @@ def test_collated_counts_merge_case_forms(spark, sf_dir):
     assert any(r["n_forms"] == 2 for r in rows)
 
 
-def test_snapshot_delta_scan_incremental_only(spark, sf_dir, committed_dir):
+def test_snapshot_delta_scan_incremental_only(
+    spark, sf_dir, art_root, committed_dir
+):
     """Delta v1->v2 contains exactly the appended third, and the delta
     read plans a scan of ONLY the v2 data files."""
     from parquet_to_csv_spark.sources import layout
@@ -932,7 +934,9 @@ def test_fs_em_separates_matches(spark, sf_dir):
     assert 0 < full["p_micro"] < 500_000
 
 
-def test_ivf_append_matches_full_assignment(spark, sf_dir, committed_dir):
+def test_ivf_append_matches_full_assignment(
+    spark, sf_dir, art_root, committed_dir
+):
     """The appended index == assign-everything-to-base-centroids, and
     the assignments relation physically contains base + delta files."""
     from parquet_to_csv_spark.operators import similarity as sim

@@ -337,7 +337,7 @@ def test_apply_cdc_feed_replicates_exactly(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_streaming_merge_sink_is_batch_split_invariant(spark, sf_dir):
+def test_streaming_merge_sink_is_batch_split_invariant(spark, sf_dir, art_root):
     """The drain's final table equals the plain batch truth regardless
     of how files landed in micro-batches (oracle pins values; here we
     pin the version count: one merge commit per micro-batch + v0)."""
