@@ -50,39 +50,24 @@ def main() -> None:
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
     timings: dict[str, float] = {}
-    # Pre-build the shared rare-first token base as an EXPLICIT, timed
-    # infra entry (round-5 verdict item 6): it is write-once
-    # infrastructure consumed by the whole prefix-filter family, and
-    # letting whichever family member ran first absorb its ~10 s made
-    # per-query numbers incomparable across rounds (8.4 s vs 4.7 s for
-    # ngram_jaccard_pairs was first-payer attribution, not a
-    # regression — warm best-of-3 at sf0.1 is 3.4-4.0 s).
-    try:
-        from parquet_to_csv_spark.operators.dedup import _token_base
-
-        t0 = time.perf_counter()
-        _token_base(spark, sf_dir).count()
-        timings["tokbase_build"] = round(time.perf_counter() - t0, 3)
-    except Exception as e:  # noqa: BLE001
-        print(f"bench: tokbase_build failed: {type(e).__name__}: {e}", file=sys.stderr)
-        timings["tokbase_build"] = -1.0
-    # Round 12 (same precedent, round-11 verdict item 1): the dedup
-    # EDGE, CLUSTER-LABEL and SPLIT-UNIT artifacts are write-once
-    # infrastructure consumed across ~20 registry queries; since they
-    # became claim_artifact-staged, the FIRST consumer in registry
-    # order absorbed each build (blocking_recall_report carried the
-    # whole unblocked corpus join, leakage_safe_split_v2/v3 a CC run
-    # each), making the audit-tier numbers first-payer attribution
-    # instead of query cost. The artifact key census (threshold ×
-    # variant actually claimed by the registry at defaults) is exactly
-    # the set below; every build still runs INSIDE the bench, timed,
-    # as explicit infra entries — the consumers then time the warm
-    # read the 100 TB design actually promises.
+    # Write-once infrastructure builds, each timed as an EXPLICIT infra
+    # entry ahead of the queries, so whichever consumer runs first does
+    # not absorb the build and the consumers time the warm read.
+    from parquet_to_csv_spark.operators import corpus as _corpus
     from parquet_to_csv_spark.operators import dedup as _dedup
+    from parquet_to_csv_spark.sources import layout as _layout
 
-    for build_name, builder in (
-        # one blocked edge artifact at the lowest registry threshold
-        # serves every t >= 0.5 consumer (filtered reads)
+    infra_builds = (
+        # the shared rare-first token base of the prefix-filter family
+        # (round-5 verdict item 6: 8.4 s vs 4.7 s for
+        # ngram_jaccard_pairs was first-payer attribution)
+        ("tokbase_build", lambda: _dedup._token_base(spark, sf_dir).count()),
+        # Round 12 (round-11 verdict item 1): the dedup EDGE,
+        # CLUSTER-LABEL and SPLIT-UNIT artifacts, consumed across ~20
+        # registry queries. The key census (threshold × variant claimed
+        # by the registry at defaults) is exactly the set below.
+        # One blocked edge artifact at the lowest registry threshold
+        # serves every t >= 0.5 consumer (filtered reads).
         ("dedup_edges_build",
          lambda: _dedup.dedup_edges(spark, sf_dir, 0.5).count()),
         # the corpus-wide UNBLOCKED prefix-filter join (E399/E415 truth)
@@ -97,44 +82,30 @@ def main() -> None:
         ("dedup_splitunits_build",
          lambda: [_dedup._split_unit_labels(spark, sf_dir, 0.8, ub).count()
                   for ub in (False, True)]),
-    ):
-        t0 = time.perf_counter()
-        try:
-            builder()
-            timings[build_name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            print(
-                f"bench: {build_name} failed: {type(e).__name__}: {e}",
-                file=sys.stderr,
-            )
-            timings[build_name] = -1.0
-    # Lakehouse gate artifacts as EXPLICIT infra entries (round-7
-    # verdict item 2, same precedent): these five gates read a
-    # build-once table whose one-time construction (commits, MERGE,
-    # partitioned writes, transactions) is write-path infrastructure.
-    # Pricing the build into the gate's single-pass number made a
-    # 0.2-0.8 s metadata-pruned warm read look like a 29-39x
-    # "regression". The builds are now timed here; the gate query in
-    # the main loop times the warm read — the number the 100 TB design
-    # actually promises.
-    from parquet_to_csv_spark.sources import layout as _layout
-
-    from parquet_to_csv_spark.operators import corpus as _corpus
-
-    for build_name, builder in (
-        ("partition_evolution_build", _layout._partition_evolution_root),
-        ("hidden_partition_build", _layout._hidden_partition_root),
-        ("merge_delete_build", _layout._merge_delete_root),
-        ("tx_lifecycle_build", _layout._tx_lifecycle_root),
-        ("replace_where_build", _layout._replace_where_root),
+        # Lakehouse gate artifacts (round-7 verdict item 2): the
+        # one-time construction (commits, MERGE, partitioned writes,
+        # transactions) priced into the gate's single pass made a
+        # 0.2-0.8 s metadata-pruned warm read look like a 29-39x
+        # "regression".
+        ("partition_evolution_build",
+         lambda: _layout._partition_evolution_root(spark, sf_dir)),
+        ("hidden_partition_build",
+         lambda: _layout._hidden_partition_root(spark, sf_dir)),
+        ("merge_delete_build",
+         lambda: _layout._merge_delete_root(spark, sf_dir)),
+        ("tx_lifecycle_build",
+         lambda: _layout._tx_lifecycle_root(spark, sf_dir)),
+        ("replace_where_build",
+         lambda: _layout._replace_where_root(spark, sf_dir)),
         # round-8 verdict item 4: the doc-grain unigram-LM score base
         # (consumed by unigram_lm_score, the lex/LM overlap report and
         # perplexity_pruning_report — the last referenced it twice)
-        ("uniglm_build", _corpus._unigram_lm_base),
-    ):
+        ("uniglm_build", lambda: _corpus._unigram_lm_base(spark, sf_dir)),
+    )
+    for build_name, builder in infra_builds:
         t0 = time.perf_counter()
         try:
-            builder(spark, sf_dir)
+            builder()
             timings[build_name] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # noqa: BLE001
             print(
@@ -241,19 +212,7 @@ def main() -> None:
     audit_sec = round(
         sum(t for k, t in timings.items() if k in AUDIT_TIER and t >= 0), 3
     )
-    INFRA_TIER = {
-        "tokbase_build",
-        "dedup_edges_build",
-        "dedup_ubedges_build",
-        "dedup_labels_build",
-        "dedup_splitunits_build",
-        "partition_evolution_build",
-        "hidden_partition_build",
-        "merge_delete_build",
-        "tx_lifecycle_build",
-        "replace_where_build",
-        "uniglm_build",
-    }
+    INFRA_TIER = {name for name, _ in infra_builds}
     infra_sec = round(
         sum(t for k, t in timings.items() if k in INFRA_TIER and t >= 0), 3
     )
@@ -270,6 +229,9 @@ def main() -> None:
         "infra_tier_sec": infra_sec,
         "hot_tier_sec": round(total - audit_sec - infra_sec, 3),
         "audit_tier": sorted(AUDIT_TIER & set(timings)),
+        # entries that raised: recorded as -1.0 and left out of every
+        # total above, so a failure shows here instead of as a speedup
+        "failed": sorted(k for k, t in timings.items() if t < 0),
         "streaming_tier": streaming_tier,
     }
     if codegen_fallbacks:

@@ -69,6 +69,58 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
+# Node-grain relations up to this many rows are broadcast inside the
+# iterative graph loops (CC, PageRank, NN-Descent); their per-round
+# joins read localCheckpoints, which carry no statistics, so the
+# planner would otherwise sort-merge-join and re-shuffle the
+# edge-grain side every round. Larger graphs keep the shuffle plan.
+_BROADCAST_NODES_MAX = 5_000_000
+
+
+def ppb_pagerank(edges: DataFrame, nodes: DataFrame, iters: int) -> DataFrame:
+    """The integer parts-per-billion PageRank recurrence shared by the
+    near-dup, weighted, personalized and TextRank operators.
+
+    ``edges(src, dst, w)`` is the directed (both ways for an undirected
+    graph) weighted edge relation; ``nodes(v, wdeg, e)`` carries each
+    vertex's out-weight sum ``wdeg`` and teleport mass ``e`` in ppb
+    (1e9 everywhere for plain PageRank, the seed share on seeds and 0
+    elsewhere for personalized). Starting at ``pr = e``, each round is
+    contribution ``(pr * w) div wdeg``, summed per destination into
+    ``inc``, then 15 % of ``e`` plus 85 % of ``inc``, each an integer
+    ``div 100``: exact longs on any engine, partitioning or iteration
+    order, so the DuckDB oracles replay the rounds bit-for-bit.
+
+    One join + one groupBy per round, lineage cut per round, no driver
+    action in the loop. The node side is broadcast when the vertex
+    count fits :data:`_BROADCAST_NODES_MAX`, so the edge relation is
+    never exchanged inside the loop. Returns ``nodes`` (every column
+    kept) with the final ``pr``.
+    """
+    nodes = nodes.transform(_cut_lineage)
+    _b = F.broadcast if nodes.count() <= _BROADCAST_NODES_MAX else (lambda df: df)
+    pr = nodes.withColumn("pr", F.col("e"))
+    for _ in range(iters):
+        contrib = (
+            _b(pr.select(F.col("v").alias("src"), "pr", "wdeg"))
+            .join(edges, "src")
+            .groupBy("dst")
+            .agg(F.sum(F.expr("(pr * w) div wdeg")).alias("inc"))
+        )
+        pr = (
+            nodes.join(_b(contrib), nodes.v == contrib.dst, "left")
+            .select(
+                nodes["*"],
+                F.expr(
+                    "(15 * e) div 100"
+                    " + (85 * coalesce(inc, cast(0 as bigint))) div 100"
+                ).cast("long").alias("pr"),
+            )
+            .transform(_cut_lineage)
+        )
+    return pr
+
+
 def _materialize_once(df: DataFrame) -> DataFrame:
     """Branch-shared materialization WITHOUT the session cache manager.
 
@@ -185,26 +237,16 @@ def dedup_edges(
     from parquet_to_csv_spark.sources.tables import source_salt
 
     key_t = int(round(threshold * 10000))
-    # spark.graft.unblockedEdges=true switches the whole edge family to
-    # the high-recall unblocked prefix-filter build (cross-block pairs
-    # included); keyed separately so blocked and unblocked artifacts
-    # never serve each other.
-    blocked = (
-        str(spark.conf.get("spark.graft.unblockedEdges", "false")).lower()
-        != "true"
-    )
     # CONTENT key, not path key: the salt folds in the documents
     # parquet's (mtime, size), so rewriting the fixture mid-process
     # invalidates every cached entry instead of serving stale edges,
     # and the md5 directory name is reproducible across processes
     # (Python's hash() is per-process salted).
-    salt = source_salt(sf_dir, "documents") + ("" if blocked else "_ub")
+    salt = source_salt(sf_dir, "documents")
     build_t = min(key_t, int(round(_BUILD_FLOOR * 10000)))
 
     def _build(stage: str) -> None:
-        ngram_jaccard_pairs(
-            spark, sf_dir, build_t / 10000.0, blocked=blocked
-        ).write.parquet(stage)
+        ngram_jaccard_pairs(spark, sf_dir, build_t / 10000.0).write.parquet(stage)
 
     path = claim_artifact(spark, f"edges_t{build_t}_{salt}", _build)
     return spark.read.parquet(path).filter(F.col("jaccard") >= threshold)
@@ -224,8 +266,8 @@ def ngram_jaccard_pairs(
     mislabeled lang/source would hide are found. Costlier (prefix
     postings collide corpus-wide instead of per block); production
     keeps blocking, audits run this to MEASURE what blocking loses
-    (see :func:`blocking_recall_report`). Also reachable via the
-    ``spark.graft.unblockedEdges`` conf on :func:`dedup_edges`.
+    (see :func:`blocking_recall_report`). Served as a build-once
+    artifact by :func:`_unblocked_edges`.
 
     Prefix-filter theorem: J(A,B) >= t forces an overlap α >= t·|A|
     (and symmetrically t·|B|); with both token sets in one global sort
@@ -564,27 +606,27 @@ def simhash_pairs(spark: SparkSession, sf_dir: str, max_hamming: int = 3) -> Dat
 
 
 #: round counts of the most recent CC run in this process, keyed by
-#: phase — observability for tests and for tuning the auto probe.
-LAST_CC_ROUNDS: dict = {"minlabel": 0, "star": 0, "algo": None}
+#: phase — observability for tests and the benchmark.
+LAST_CC_ROUNDS: dict = {"minlabel": 0, "star": 0}
+
+# min-label rounds connected_components tries before switching to star
+# contraction; near-dup components are shallow (diameter ~2-4)
+_CC_PROBE_ROUNDS = 8
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over an (src, dst) edge relation.
 
-    DEFAULT (``spark.graft.ccAlgorithm=auto``, round 6 — closes the
-    round-5 verdict item 3): min-label propagation probes for up to
-    ``spark.graft.ccProbeRounds`` (default 8) rounds — near-dup
-    clusters are shallow (pairs verified against one pivot, diameter
-    ~2-4), so the probe converges and IS the answer at one shuffle per
-    hop. If the probe does NOT converge the component diameter exceeds
-    the probe depth, and the implementation auto-switches to
-    :func:`_cc_star_contraction` (Kiveris et al. large-star/small-star,
-    O(log²) rounds on ANY graph shape) — a deep chain costs probe+log²
-    rounds instead of diameter rounds. Results are identical on every
-    path, pinned by the conf-flag parity test and the deep-chain test.
-
-    ``spark.graft.ccAlgorithm=minlabel`` forces pure label propagation
-    (max_iter rounds); ``=starcontraction`` forces star contraction.
+    Min-label propagation probes for up to ``_CC_PROBE_ROUNDS`` (8)
+    rounds — near-dup clusters are shallow (pairs verified against one
+    pivot, diameter ~2-4), so the probe converges and IS the answer at
+    one shuffle per hop. If the probe does NOT converge the component
+    diameter exceeds the probe depth, and the implementation switches
+    to :func:`_cc_star_contraction` (Kiveris et al.
+    large-star/small-star, O(log²) rounds on ANY graph shape) — a deep
+    chain costs probe+log² rounds instead of diameter rounds. Results
+    are identical on both paths, pinned by the star-contraction parity
+    test and the deep-chain test.
 
     Min-label rounds: every vertex starts labeled with its own id;
     each round takes the min of its own and its neighbors' labels;
@@ -593,17 +635,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
     Returns (v, cluster_id) with cluster_id = min vertex id reachable.
     """
-    conf = edges.sparkSession.conf
-    algo = conf.get("spark.graft.ccAlgorithm", "auto")
-    LAST_CC_ROUNDS.update({"minlabel": 0, "star": 0, "algo": algo})
-    if algo == "starcontraction":
-        return _cc_star_contraction(edges, max_iter)
-    if algo == "auto":
-        probe_rounds = min(
-            max_iter, int(conf.get("spark.graft.ccProbeRounds", "8"))
-        )
-    else:
-        probe_rounds = max_iter
+    LAST_CC_ROUNDS.update({"minlabel": 0, "star": 0})
     both = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
         .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("w")))
@@ -632,14 +664,12 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # cheap count over the checkpointed init labels) fits the
     # threshold, broadcast the node side — the edge relation is then
     # never exchanged inside the loop. A billion-node deployment
-    # exceeds the threshold and keeps the shuffle plan; the knob is the
+    # exceeds the threshold and keeps the shuffle plan; the gate is the
     # data's size, not the cluster's.
-    bcast_nodes = labels.count() <= int(
-        conf.get("spark.graft.graph.broadcastNodesMax", "5000000")
-    )
+    bcast_nodes = labels.count() <= _BROADCAST_NODES_MAX
     _b = F.broadcast if bcast_nodes else (lambda df: df)
     converged = False
-    for i in range(probe_rounds):
+    for i in range(min(max_iter, _CC_PROBE_ROUNDS)):
         nbr = (
             both.join(_b(labels), both.w == labels.v)
             .groupBy("u")
@@ -659,7 +689,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         if stepped.filter(F.col("old_l") != F.col("l")).limit(1).count() == 0:
             converged = True
             break
-    if not converged and algo == "auto":
+    if not converged:
         # diameter exceeds the probe depth — deep graph; switch to the
         # O(log²)-round contraction instead of paying diameter rounds
         return _cc_star_contraction(edges, max_iter)
@@ -785,23 +815,16 @@ def dup_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> Da
     re-run the iterative CC loop — ~2.4 s of per-round driver latency
     per consumer at sf0.1, and at 100 TB the re-run IS the job. Same
     ``claim_artifact`` discipline as :func:`dedup_edges` (content salt,
-    put-if-absent DONE manifest, crash-safe); keyed additionally by
-    the CC confs so a forced-algorithm session never serves an
-    auto-mode build. The labels are deterministic (min reachable id)
+    put-if-absent DONE manifest, crash-safe), keyed by threshold and
+    corpus. The labels are deterministic (min reachable id)
     and parquet round-trips longs/booleans exactly, so results are
     hash-identical to the direct build."""
     from parquet_to_csv_spark.sources.layout import claim_artifact
     from parquet_to_csv_spark.sources.tables import source_salt
 
-    conf = spark.conf
-    blocked = (
-        str(conf.get("spark.graft.unblockedEdges", "false")).lower() != "true"
-    )
-    salt = source_salt(sf_dir, "documents") + ("" if blocked else "_ub")
-    algo = conf.get("spark.graft.ccAlgorithm", "auto")
-    probe = conf.get("spark.graft.ccProbeRounds", "8")
     key = (
-        f"clusters_t{int(round(threshold * 10000))}_{algo}_p{probe}_{salt}"
+        f"clusters_t{int(round(threshold * 10000))}_"
+        + source_salt(sf_dir, "documents")
     )
 
     def _build(stage: str) -> None:
@@ -1021,48 +1044,26 @@ def neardup_pagerank(
     pick which member of a duplicate neighborhood to keep (vs the
     min-id canonical of ``dup_clusters``).
 
-    Iterative DataFrame algebra, same discipline as
-    ``connected_components``/``kmeans_iterations``: per round one join
-    (ranks onto edges) + one groupBy (sum of contributions), lineage
-    truncated per round with ``localCheckpoint``; no driver action
-    inside the loop body. Rank mass is carried as exact integer
-    parts-per-billion — contribution = pr div degree, update =
-    0.15 + 0.85·incoming in ppb integer arithmetic — so any engine,
-    any partitioning, any iteration order produces identical longs,
-    and the DuckDB oracle replays both iterations as two CTE levels.
+    :func:`ppb_pagerank` with unit edge weights and uniform teleport
+    ``e = 1e9``: contribution = pr div degree, update = 0.15 +
+    0.85·incoming in exact integer ppb, so the DuckDB oracle replays
+    both iterations as two CTE levels.
     """
     pairs = dedup_edges(spark, sf_dir, threshold).select("doc_a", "doc_b")
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
+        .withColumn("w", F.lit(1))
         .transform(_cut_lineage)
     )
-    nodes = edges.groupBy("src").agg(F.count("*").alias("deg")).select(
-        F.col("src").alias("v"), "deg"
+    nodes = edges.groupBy("src").agg(F.count("*").alias("wdeg")).select(
+        F.col("src").alias("v"), "wdeg",
+        F.lit(1_000_000_000).cast("long").alias("e"),
     )
-    pr = nodes.select("v", "deg", F.lit(1_000_000_000).cast("long").alias("pr"))
-    for _ in range(iters):
-        contrib = (
-            pr.select(F.col("v").alias("src"), F.expr("pr div deg").alias("c"))
-            .join(edges, "src")
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inc"))
-        )
-        pr = (
-            nodes.join(contrib, nodes.v == contrib.dst, "left")
-            .select(
-                nodes.v,
-                nodes.deg,
-                (
-                    F.lit(150_000_000)
-                    + F.expr("(85 * coalesce(inc, cast(0 as bigint))) div 100")
-                ).cast("long").alias("pr"),
-            )
-            .transform(_cut_lineage)
-        )
-    return pr.select(
-        F.col("v").alias("doc_id"), "deg", F.col("pr").alias("pr_ppb")
+    return ppb_pagerank(edges, nodes, iters).select(
+        F.col("v").alias("doc_id"), F.col("wdeg").alias("deg"),
+        F.col("pr").alias("pr_ppb"),
     )
 
 
@@ -1714,7 +1715,7 @@ def kcore_decomposition(
     quadratic); each peel round is one degree aggregation + two
     LEFT SEMI joins against the survivor set — shuffle bounded by the
     (shrinking) edge relation. Round boundaries are ``localCheckpoint``
-    (the CC-iteration convention, dedup.py:338): the expensive edge
+    (the :func:`connected_components` convention): the expensive edge
     build runs ONCE and each round's plan starts from materialized
     partitions instead of re-deriving the whole unrolled tree — the
     unrolled-lazy variant re-executed the Jaccard join per branch
@@ -2283,12 +2284,11 @@ def weighted_pagerank(
     TIGHTEST duplication mass (the strongest canonical-keep signal),
     not merely the best-connected ones.
 
-    Same iterative discipline (one join + one groupBy per round,
-    lineage cut per round, no driver action in the loop body) riding
-    the SAME materialized edge relation. All integer: edge weight =
-    round(jaccard·10⁴); contribution = pr·w div W_u with W_u the exact
-    out-weight sum; update = 0.15 + 0.85·incoming in ppb longs — the
-    DuckDB oracle replays both rounds as CTE levels bit-for-bit.
+    :func:`ppb_pagerank` riding the SAME materialized edge relation.
+    All integer: edge weight = round(jaccard·10⁴); contribution =
+    pr·w div W_u with W_u the exact out-weight sum; update = 0.15 +
+    0.85·incoming in ppb longs — the DuckDB oracle replays both rounds
+    as CTE levels bit-for-bit.
     """
     e = dedup_edges(spark, sf_dir, threshold).select(
         "doc_a", "doc_b",
@@ -2301,30 +2301,10 @@ def weighted_pagerank(
         .transform(_cut_lineage)
     )
     nodes = edges.groupBy("src").agg(F.sum("w").alias("wdeg")).select(
-        F.col("src").alias("v"), "wdeg"
+        F.col("src").alias("v"), "wdeg",
+        F.lit(1_000_000_000).cast("long").alias("e"),
     )
-    pr = nodes.select("v", "wdeg", F.lit(1_000_000_000).cast("long").alias("pr"))
-    for _ in range(iters):
-        contrib = (
-            pr.select(F.col("v").alias("src"), "pr", "wdeg")
-            .join(edges, "src")
-            .select("dst", F.expr("(pr * w) div wdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inc"))
-        )
-        pr = (
-            nodes.join(contrib, nodes.v == contrib.dst, "left")
-            .select(
-                nodes.v,
-                nodes.wdeg,
-                (
-                    F.lit(150_000_000)
-                    + F.expr("(85 * coalesce(inc, cast(0 as bigint))) div 100")
-                ).cast("long").alias("pr"),
-            )
-            .transform(_cut_lineage)
-        )
-    return pr.select(
+    return ppb_pagerank(edges, nodes, iters).select(
         F.col("v").alias("doc_id"), "wdeg", F.col("pr").alias("pr_ppb")
     )
 
@@ -2899,7 +2879,7 @@ def leakage_safe_split_v2(
     Cost: the exact-hash edges are one map-side hash aggregate (star
     edges, not pairwise — a 10^6-copy group contributes 10^6−1 edges,
     never quadratic), unioned into the same CC machinery (min-label
-    here; `spark.graft.ccAlgorithm=starcontraction` at web scale).
+    probe, switching to star contraction on deep components).
     """
     from parquet_to_csv_spark.operators.corpus import md5_bucket
 
@@ -3256,18 +3236,15 @@ def _split_unit_labels(
     built these labels once and E415 built BOTH variants again —
     three iterative CC runs per bench pass for two distinct label
     relations. Same ``claim_artifact`` discipline as the edge tables;
-    keyed by threshold, edge variant and the CC confs. Returns
+    keyed by threshold and edge variant. Returns
     (v, cluster_id) exactly as :func:`connected_components` does."""
     from parquet_to_csv_spark.sources.layout import claim_artifact
     from parquet_to_csv_spark.sources.tables import source_salt
 
-    conf = spark.conf
-    algo = conf.get("spark.graft.ccAlgorithm", "auto")
-    probe = conf.get("spark.graft.ccProbeRounds", "8")
     variant = "ub" if unblocked else "bl"
     key = (
-        f"splitunits_{variant}_t{int(round(threshold * 10000))}"
-        f"_{algo}_p{probe}_" + source_salt(sf_dir, "documents")
+        f"splitunits_{variant}_t{int(round(threshold * 10000))}_"
+        + source_salt(sf_dir, "documents")
     )
 
     def _build(stage: str) -> None:
@@ -3581,13 +3558,12 @@ def personalized_pagerank(
     teleports to the seed set instead of uniformly (Haveliwala 2002),
     so rank decays geometrically with graph distance from benchmarks.
 
-    Same iterative discipline as ``neardup_pagerank``: one join + one
-    groupBy per round, lineage cut per round, NO driver action in the
-    loop; mass carried as exact integer ppb (teleport = (15 % of
-    1e9 div |seeds|) on seeds; propagation = 85 % of pr div deg), so
-    every engine/partitioning yields identical longs and the DuckDB
-    oracle unrolls the ``iters`` levels MATERIALIZED. Output: top-k
-    NON-seed documents by rank (the actionable review queue).
+    :func:`ppb_pagerank` with unit edge weights and the seed teleport
+    ``e = 1e9 div |seeds|`` on seeds, 0 elsewhere (propagation = 85 %
+    of pr div deg), so every engine/partitioning yields identical longs
+    and the DuckDB oracle unrolls the ``iters`` levels MATERIALIZED.
+    Output: top-k NON-seed documents by rank (the actionable review
+    queue).
 
     The graph is the UNBLOCKED edge artifact (E399) by necessity, not
     preference: lang×source blocking makes every neighbor of a seed a
@@ -3601,51 +3577,26 @@ def personalized_pagerank(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
+        .withColumn("w", F.lit(1))
         .transform(_cut_lineage)
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     nodes = (
-        edges.groupBy("src").agg(F.count("*").alias("deg"))
-        .select(F.col("src").alias("v"), "deg")
+        edges.groupBy("src").agg(F.count("*").alias("wdeg"))
+        .select(F.col("src").alias("v"), "wdeg")
         .join(docs, F.col("v") == docs.doc_id)
-        .select("v", "deg", (F.col("source") == "src0").alias("is_seed"))
+        .select("v", "wdeg", (F.col("source") == "src0").alias("is_seed"))
     )
     nseed = F.broadcast(
         nodes.filter("is_seed").agg(F.count(F.lit(1)).alias("ns"))
     )
     base = nodes.join(nseed).select(
-        "v", "deg", "is_seed",
+        "v", "wdeg", "is_seed",
         F.expr(
             "case when is_seed then 1000000000 div ns else cast(0 as bigint) end"
         ).alias("e"),
-    ).transform(_cut_lineage)
-    pr = base.select("v", "deg", "is_seed", "e", F.col("e").alias("pr"))
-    # size-gated rank broadcast (round 12, guide §3.1 — same rationale
-    # as the connected_components loop): rank rows are node-grain, the
-    # unblocked edge relation is ~2 orders larger; broadcasting the
-    # rank side keeps the edge relation un-exchanged in every round
-    bcast_nodes = base.count() <= int(
-        spark.conf.get("spark.graft.graph.broadcastNodesMax", "5000000")
     )
-    _b = F.broadcast if bcast_nodes else (lambda df: df)
-    for _ in range(iters):
-        contrib = (
-            _b(pr.select(F.col("v").alias("src"), F.expr("pr div deg").alias("c")))
-            .join(edges, "src")
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inc"))
-        )
-        pr = (
-            base.join(_b(contrib), base.v == contrib.dst, "left")
-            .select(
-                base.v, base.deg, base.is_seed, base.e,
-                (
-                    F.expr("(15 * e) div 100")
-                    + F.expr("(85 * coalesce(inc, cast(0 as bigint))) div 100")
-                ).cast("long").alias("pr"),
-            )
-            .transform(_cut_lineage)
-        )
+    pr = ppb_pagerank(edges, base, iters)
     from pyspark.sql import Window as W
 
     # TakeOrdered first (no global window over the node relation);
@@ -3657,7 +3608,7 @@ def personalized_pagerank(
     )
     wr = W.orderBy(F.col("pr").desc(), F.col("v"))
     return top.withColumn("rank", F.row_number().over(wr)).select(
-        F.col("v").alias("doc_id"), "deg",
+        F.col("v").alias("doc_id"), F.col("wdeg").alias("deg"),
         F.col("pr").alias("ppr_ppb"),
         F.col("rank").cast("long").alias("rank"),
     )

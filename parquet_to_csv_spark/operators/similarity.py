@@ -3389,13 +3389,13 @@ def nndescent_topk(
         )
 
     # size-gated broadcast for the NoN self-join: each side is ≤ 2kN
-    # rows of two longs; the gate is the DATA's size (same knob as the
+    # rows of two longs; the gate is the DATA's size (same gate as the
     # graph loops in dedup.py), so a billion-vector corpus keeps the
     # shuffle plan
+    from parquet_to_csv_spark.operators.dedup import _BROADCAST_NODES_MAX
+
     n_emb = emb.count()
-    bcast = (2 * k * n_emb) <= int(
-        spark.conf.get("spark.graft.graph.broadcastNodesMax", "5000000")
-    )
+    bcast = (2 * k * n_emb) <= _BROADCAST_NODES_MAX
     _b = F.broadcast if bcast else (lambda df: df)
 
     # localCheckpoint between rounds: each round's plan references the

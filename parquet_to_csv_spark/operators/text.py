@@ -2124,15 +2124,15 @@ def textrank_keywords(
     centrality of its neighborhood — the graph rung of the keyword
     ladder beside RAKE (E427) and chi² (E141).
 
-    Same integer-ppb fixed-point discipline as the E91 PageRank:
+    The E91 integer-ppb recurrence (:func:`~parquet_to_csv_spark.
+    operators.dedup.ppb_pagerank`, unit edge weights, uniform teleport):
     contribution = pr div deg, update = 0.15 + 0.85·incoming in exact
-    long arithmetic, per-round lineage cut — any engine or
-    partitioning yields identical longs, and the oracle unrolls the
-    ``iters`` rounds as MATERIALIZED CTE levels. Plan: one token scan
-    → adjacent-pair explode (map-local) → distinct edge relation
-    (vocabulary²-bounded, sparse) → |V|-scale iteration relations.
-    Top-k via TakeOrderedAndProject."""
-    from parquet_to_csv_spark.operators.dedup import _cut_lineage
+    long arithmetic — any engine or partitioning yields identical
+    longs, and the oracle unrolls the ``iters`` rounds as MATERIALIZED
+    CTE levels. Plan: one token scan → adjacent-pair explode
+    (map-local) → distinct edge relation (vocabulary²-bounded, sparse)
+    → |V|-scale iteration relations. Top-k via TakeOrderedAndProject."""
+    from parquet_to_csv_spark.operators.dedup import _cut_lineage, ppb_pagerank
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(tokens_col("text").alias("w"))
@@ -2160,33 +2160,19 @@ def textrank_keywords(
         und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .union(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .distinct()
+        .withColumn("w", F.lit(1))
         .transform(_cut_lineage)
     )
-    nodes = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).select(
-        F.col("src").alias("t"), "deg"
+    nodes = edges.groupBy("src").agg(F.count(F.lit(1)).alias("wdeg")).select(
+        F.col("src").alias("v"), "wdeg",
+        F.lit(1_000_000_000).cast("long").alias("e"),
     )
-    pr = nodes.select("t", "deg", F.lit(1_000_000_000).cast("long").alias("pr"))
-    for _ in range(iters):
-        contrib = (
-            pr.select(F.col("t").alias("src"), F.expr("pr div deg").alias("c"))
-            .join(edges, "src")
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inc"))
-        )
-        pr = (
-            nodes.join(contrib, nodes.t == contrib.dst, "left")
-            .select(
-                nodes.t,
-                nodes.deg,
-                (
-                    F.lit(150_000_000)
-                    + F.expr("(85 * coalesce(inc, cast(0 as bigint))) div 100")
-                ).cast("long").alias("pr"),
-            )
-            .transform(_cut_lineage)
-        )
     return (
-        pr.select(F.col("t").alias("token"), "deg", F.col("pr").alias("pr_ppb"))
+        ppb_pagerank(edges, nodes, iters)
+        .select(
+            F.col("v").alias("token"), F.col("wdeg").alias("deg"),
+            F.col("pr").alias("pr_ppb"),
+        )
         .orderBy(F.desc("pr_ppb"), F.asc("token"))
         .limit(k)
     )

@@ -1,12 +1,12 @@
 """Large-star/small-star connected components (round 4, verdict #9).
 
-``spark.graft.ccAlgorithm=starcontraction`` swaps dup_clusters' (and
-every connected_components caller's) min-label loop for the Kiveris et
-al. contraction. These tests pin (a) exact parity with the min-label
-loop on the real near-dup graph, (b) correctness against a pure-Python
-union-find on random graphs including shapes that stress each
-algorithm (long chains = depth, stars = fan-out), (c) the conf flag's
-round-trip."""
+connected_components switches from its min-label probe to the Kiveris
+et al. contraction when the probe does not converge. These tests pin
+(a) exact parity of the contraction with connected_components on the
+real near-dup graph, (b) correctness against a pure-Python union-find
+on random graphs including shapes that stress each algorithm (long
+chains = depth, stars = fan-out), (c) which path the switch takes on a
+shallow and on a deep graph."""
 
 from __future__ import annotations
 
@@ -70,19 +70,18 @@ def test_star_contraction_matches_union_find(spark, edges):
     assert got == want
 
 
-def test_conf_flag_parity_on_real_neardup_graph(spark, sf_dir):
+def test_star_contraction_parity_on_real_neardup_graph(spark, sf_dir):
+    edges = dedup.dedup_edges(spark, sf_dir, 0.8).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
     base = {
-        (r["doc_id"], r["cluster_id"], r["is_canonical"])
-        for r in dedup.dup_clusters(spark, sf_dir, 0.8).collect()
+        (r["v"], r["cluster_id"])
+        for r in dedup.connected_components(edges).collect()
     }
-    spark.conf.set("spark.graft.ccAlgorithm", "starcontraction")
-    try:
-        star = {
-            (r["doc_id"], r["cluster_id"], r["is_canonical"])
-            for r in dedup.dup_clusters(spark, sf_dir, 0.8).collect()
-        }
-    finally:
-        spark.conf.unset("spark.graft.ccAlgorithm")
+    star = {
+        (r["v"], r["cluster_id"])
+        for r in dedup._cc_star_contraction(edges).collect()
+    }
     assert star == base and len(base) > 0
 
 
@@ -94,15 +93,14 @@ def test_auto_shallow_graph_stays_on_minlabel_probe(spark):
     got = {r["v"]: r["cluster_id"]
            for r in dedup.connected_components(df).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10}
-    assert dedup.LAST_CC_ROUNDS["algo"] == "auto"
     assert dedup.LAST_CC_ROUNDS["star"] == 0
     assert 1 <= dedup.LAST_CC_ROUNDS["minlabel"] <= 8
 
 
 def test_auto_deep_chain_switches_to_star_contraction(spark):
     # round-6 verdict item 3: a 10k-vertex path graph (diameter 10k)
-    # must NOT pay diameter rounds — the auto probe bails after
-    # ccProbeRounds and star contraction converges in ~log² rounds.
+    # must NOT pay diameter rounds — the probe bails after 8 rounds
+    # and star contraction converges in ~log² rounds.
     n = 10_000
     df = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
@@ -110,6 +108,5 @@ def test_auto_deep_chain_switches_to_star_contraction(spark):
     labels = dedup.connected_components(df).collect()
     assert len(labels) == n
     assert all(r["cluster_id"] == 0 for r in labels)
-    assert dedup.LAST_CC_ROUNDS["algo"] == "auto"
     assert dedup.LAST_CC_ROUNDS["minlabel"] == 8       # probe exhausted
     assert 1 <= dedup.LAST_CC_ROUNDS["star"] <= 20     # ~log²(10k), not 10k

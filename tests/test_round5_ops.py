@@ -54,20 +54,17 @@ def test_strategy_report_carries_measured_recall(spark, sf_dir):
     )
 
 
-def test_unblocked_edges_conf_switches_build(spark, sf_dir):
-    """spark.graft.unblockedEdges=true must route dedup_edges through
-    the unblocked build, keyed separately from the blocked artifact."""
+def test_unblocked_edges_artifact_kept_apart_from_blocked(spark, sf_dir):
+    """_unblocked_edges serves the unblocked build, keyed separately
+    from the blocked dedup_edges artifact."""
     blocked_edges = _pairset(dedup.dedup_edges(spark, sf_dir, 0.8))
-    spark.conf.set("spark.graft.unblockedEdges", "true")
-    try:
-        unblocked_edges = _pairset(dedup.dedup_edges(spark, sf_dir, 0.8))
-    finally:
-        spark.conf.set("spark.graft.unblockedEdges", "false")
+    unblocked_edges = _pairset(dedup._unblocked_edges(spark, sf_dir, 0.8))
     assert blocked_edges <= unblocked_edges
     assert unblocked_edges == _pairset(
         dedup.ngram_jaccard_pairs(spark, sf_dir, 0.8, blocked=False)
     )
-    # the conf reset serves the BLOCKED artifact again (no key bleed)
+    # neither artifact serves the other (no key bleed)
+    assert blocked_edges < unblocked_edges
     assert _pairset(dedup.dedup_edges(spark, sf_dir, 0.8)) == blocked_edges
 
 

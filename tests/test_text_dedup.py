@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql import Row, functions as F
 
 from parquet_to_csv_spark.operators import dedup, text
@@ -233,31 +236,75 @@ def test_repetition_stats_local_replay(spark, sf_dir):
         assert (r["n_trigrams"], r["dup_trigram_ppm"]) == (tt, dt)
 
 
-def test_pagerank_integer_replay_and_bounds(spark, sf_dir):
-    """PageRank over the near-dup graph equals a driver-side replay of
-    the integer ppb recurrence on the collected edge set, and every
-    rank carries at least the damping floor."""
+def _ppb_pagerank_replay(adj, e, iters):
+    """Driver-side replay of the integer ppb PageRank recurrence over
+    ``adj[v] = {u: w}``: contribution pr·w div Σw, update 15 % of the
+    teleport ``e[v]`` plus 85 % of the incoming sum, starting at pr = e."""
     from collections import defaultdict
 
-    pairs = dedup.ngram_jaccard_pairs(spark, sf_dir, 0.8).collect()
-    adj = defaultdict(set)
-    for r in pairs:
-        adj[r["doc_a"]].add(r["doc_b"])
-        adj[r["doc_b"]].add(r["doc_a"])
-    pr = {v: 1_000_000_000 for v in adj}
-    deg = {v: len(ns) for v, ns in adj.items()}
-    for _ in range(2):
+    wdeg = {v: sum(ns.values()) for v, ns in adj.items()}
+    pr = dict(e)
+    for _ in range(iters):
         inc = defaultdict(int)
         for v, ns in adj.items():
-            c = pr[v] // deg[v]
-            for w in ns:
-                inc[w] += c
-        pr = {v: 150_000_000 + (85 * inc[v]) // 100 for v in adj}
-    got = dedup.neardup_pagerank(spark, sf_dir).collect()
+            for u, w in ns.items():
+                inc[u] += (pr[v] * w) // wdeg[v]
+        pr = {v: (15 * e[v]) // 100 + (85 * inc[v]) // 100 for v in adj}
+    return pr, wdeg
+
+
+def _adjacency(pairs, weight):
+    from collections import defaultdict
+
+    adj = defaultdict(dict)
+    for r in pairs:
+        w = weight(r)
+        adj[r["doc_a"]][r["doc_b"]] = w
+        adj[r["doc_b"]][r["doc_a"]] = w
+    return adj
+
+
+@pytest.mark.parametrize(
+    "op", ["neardup_pagerank", "weighted_pagerank", "personalized_pagerank"]
+)
+def test_pagerank_integer_replay_and_bounds(spark, sf_dir, op):
+    """Each near-dup PageRank operator equals a driver-side replay of
+    the integer ppb recurrence on the collected edge set, and every
+    uniform-teleport rank carries the damping floor."""
+    if op == "personalized_pagerank":
+        pairs = dedup.ngram_jaccard_pairs(spark, sf_dir, 0.8, blocked=False)
+        adj = _adjacency(pairs.collect(), lambda r: 1)
+        seeds = {
+            r["doc_id"]
+            for r in load_table(spark, sf_dir, "documents")
+            .filter(F.col("source") == "src0")
+            .collect()
+        } & set(adj)
+        e = {v: (1_000_000_000 // len(seeds) if v in seeds else 0) for v in adj}
+        pr, deg = _ppb_pagerank_replay(adj, e, 3)
+        ranked = sorted(
+            (v for v in adj if v not in seeds and pr[v] > 0),
+            key=lambda v: (-pr[v], v),
+        )[:20]
+        got = dedup.personalized_pagerank(spark, sf_dir).collect()
+        assert seeds and len(got) == len(ranked) > 0
+        assert [
+            (r["doc_id"], r["deg"], r["ppr_ppb"], r["rank"]) for r in got
+        ] == [(v, deg[v], pr[v], i + 1) for i, v in enumerate(ranked)]
+        return
+    pairs = dedup.ngram_jaccard_pairs(spark, sf_dir, 0.8).collect()
+    if op == "weighted_pagerank":
+        adj = _adjacency(pairs, lambda r: math.floor(r["jaccard"] * 10000 + 0.5))
+        deg_col = "wdeg"
+    else:
+        adj = _adjacency(pairs, lambda r: 1)
+        deg_col = "deg"
+    pr, deg = _ppb_pagerank_replay(adj, {v: 1_000_000_000 for v in adj}, 2)
+    got = getattr(dedup, op)(spark, sf_dir).collect()
     assert len(got) == len(pr)
     for r in got:
         assert r["pr_ppb"] == pr[r["doc_id"]]
-        assert r["deg"] == deg[r["doc_id"]]
+        assert r[deg_col] == deg[r["doc_id"]]
         assert r["pr_ppb"] >= 150_000_000
 
 
