@@ -3,19 +3,6 @@
 All JVM-side — no Python boundary, so a 100 TB embedding scan stays
 vectorized. Embeddings are ``array<float>``; we accumulate in double
 for precision and cross-engine (DuckDB oracle) agreement.
-
-History: round 11 added an optional ``dim=`` unrolled multiply-add
-chain (codegen'd) behind a ``spark.graft.vectors.unrollDim`` conf,
-motivated by a 2.9× isolated-kernel win over the ``CodegenFallback``
-higher-order fold. Round 12 DELETED that path (verdict item 8 —
-prove or drop): re-measured *integrated*, the ~3·dim-node expression
-trees are duplicated per use site (cosine triples them) and analysis/
-codegen costs swamp the kernel win — truncation_quality went
-1.9 → 22.6 s, knn_shapley_values 3.5 → 10.8 s, cosine_topk
-0.49 → 2.5 s with the unroll enabled at sf0.1. The higher-order fold
-is the only implementation again. The ``dim`` parameter is retained as
-an inert compatibility seam for the ~100 call sites that pass the
-(now always-None) probed dimension.
 """
 
 from __future__ import annotations
@@ -23,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def _dot_hof(a: Column, b: Column) -> Column:
+def dot_product(a: Column, b: Column) -> Column:
+    """⟨a,b⟩ with double accumulation (left fold, index order)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -31,28 +19,17 @@ def _dot_hof(a: Column, b: Column) -> Column:
     )
 
 
-def _sq_hof(a: Column) -> Column:
-    return F.aggregate(
-        a,
-        F.lit(0.0),
-        lambda acc, v: acc + v.cast("double") * v.cast("double"),
+def l2_norm(a: Column) -> Column:
+    return F.sqrt(
+        F.aggregate(
+            a,
+            F.lit(0.0),
+            lambda acc, v: acc + v.cast("double") * v.cast("double"),
+        )
     )
 
 
-def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
-    """⟨a,b⟩ with double accumulation (left fold, index order).
-
-    ``dim`` is inert (see module docstring) — kept so call sites that
-    plumb a probed dimension need not change shape.
-    """
-    return _dot_hof(a, b)
-
-
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(_sq_hof(a))
-
-
-def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity; null/zero-norm safe (returns NULL)."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > F.lit(0.0), dot_product(a, b) / denom)

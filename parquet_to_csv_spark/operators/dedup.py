@@ -52,7 +52,8 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cut_lineage(df: DataFrame) -> DataFrame:
     """Iteration-boundary lineage cut for the iterative graph ops
-    (connected components, LPA, k-core). Default: ``localCheckpoint``
+    (connected components, star contraction, the PageRank kernel,
+    k-core). Default: ``localCheckpoint``
     — fast, blocks live in executor memory, right for interactive and
     single-job use. If the session sets ``spark.graft.checkpointDir``,
     a RELIABLE ``checkpoint`` to that directory is used instead:
@@ -713,7 +714,8 @@ def _cc_star_contraction(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
     Returns (v, cluster_id) over every non-isolated vertex — the same
     contract as the min-label loop, pinned identical by the
-    partition-count invariance test and the conf-flag parity test.
+    partition-count invariance test and
+    ``test_star_contraction_parity_on_real_neardup_graph``.
     """
     both = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
@@ -1776,7 +1778,7 @@ def jaccard_threshold_profile(
         )
         levels.append(
             deg.agg(
-                F.lit(int(t * 100)).cast("long").alias("threshold_pct"),
+                F.lit(int(round(t * 100))).cast("long").alias("threshold_pct"),
                 F.coalesce(F.sum("dg"), F.lit(0)).alias("endpoint_count"),
                 F.count(F.lit(1)).alias("n_docs"),
                 F.coalesce(F.max("dg"), F.lit(0)).alias("max_degree"),
@@ -3206,7 +3208,7 @@ def _unblocked_edges(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -
             spark, sf_dir, threshold, blocked=False
         ).write.parquet(stage)
 
-    key = f"ubedges_t{int(threshold * 10000)}_" + source_salt(sf_dir, "documents")
+    key = f"ubedges_t{int(round(threshold * 10000))}_" + source_salt(sf_dir, "documents")
     return spark.read.parquet(claim_artifact(spark, key, _build))
 
 

@@ -28,29 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from parquet_to_csv_spark.functions.vectors import dot_product, l2_norm
 from parquet_to_csv_spark.sources.tables import load_table
 
-# --- embedding-dimension probe (round-11 optimization) -----------------
-# The corpus contract is fixed-dim embeddings (64 on the fixtures).
-# Knowing the dim lets functions.vectors emit the codegen'd multiply-add
-# chain instead of the CodegenFallback higher-order fold. Measured on 2M
-# 64-dim pairs (noop sink, best-of-3): 13.8 s interpreted fold → 4.8 s
-# unrolled steady-state (2.9×) — but the unrolled chain also costs ~4 s
-# of one-time Janino compilation per codegen stage, which DOMINATES at
-# bench scale (sf0.1 queries run once over ≤ a few hundred thousand
-# pairs: cosine_topk noop 0.25 s → 2.6 s). So the unroll is a
-# Round 12: the round-11 `spark.graft.vectors.unrollDim` knob is
-# DELETED (verdict item 8 — prove or drop). The integrated re-measure
-# at sf0.1 killed it: with the unroll enabled, truncation_quality went
-# 1.9 → 22.6 s, knn_shapley_values 3.5 → 10.8 s, cosine_topk
-# 0.49 → 2.5 s — the per-expression ~3·dim-node Catalyst trees get
-# duplicated per use site (cosine alone triples them) and codegen /
-# analysis costs swamp the 2.9× kernel win the isolated round-11
-# microbenchmark measured. The higher-order fold is the only path
-# again; _emb_dim stays as a (now constant-None) seam so call sites
-# keep their shape.
-def _emb_dim(spark: SparkSession, sf_dir: str) -> int | None:
-    return None
-
-
 def cosine_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -64,7 +41,6 @@ def cosine_topk(
     |queries|×N rows hash-partitioned on query_id.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = _emb_dim(spark, sf_dir)
     # Norms are precomputed per relation (O(N) array passes), so the
     # |queries|×N pair stage pays only the dot product — same float
     # expression dot/(nrm_q*nrm_c) as the fused form and the oracle,
@@ -72,16 +48,16 @@ def cosine_topk(
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding"), dim).alias("q_nrm"),
+        l2_norm(F.col("embedding")).alias("q_nrm"),
     )
     c = emb.select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("c_emb"),
-        l2_norm(F.col("embedding"), dim).alias("c_nrm"),
+        l2_norm(F.col("embedding")).alias("c_nrm"),
     )
     denom = F.col("q_nrm") * F.col("c_nrm")
     sim = F.when(
-        denom > F.lit(0.0), dot_product(F.col("q_emb"), F.col("c_emb"), dim) / denom
+        denom > F.lit(0.0), dot_product(F.col("q_emb"), F.col("c_emb")) / denom
     )
     w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
     return (
@@ -141,8 +117,7 @@ def _srp_bits(vec_sql: str, n_bits: int = 8, dim: int = 64, seed: int = 1234) ->
 
 
 def neardup_pairs_df(
-    emb: DataFrame, threshold: float = 0.4, max_block: int = 100_000,
-    dim: int | None = None,
+    emb: DataFrame, threshold: float = 0.4, max_block: int = 100_000
 ) -> DataFrame:
     """Core of :func:`embedding_neardup_pairs` over any
     (vec_id, label, embedding) relation.
@@ -158,7 +133,7 @@ def neardup_pairs_df(
     (the LSH/IVF tiers are the principled path for such data).
     """
     normed = emb.select(
-        "vec_id", "label", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "label", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     # one row per label — plain join (AQE broadcasts when small; at huge
     # label cardinality a broadcast hint would be the scale-killer).
@@ -171,7 +146,7 @@ def neardup_pairs_df(
     )
     a = keyed.alias("a")
     b = keyed.alias("b")
-    sim = dot_product(F.col("a.embedding"), F.col("b.embedding"), dim) / (
+    sim = dot_product(F.col("a.embedding"), F.col("b.embedding")) / (
         F.col("a.nrm") * F.col("b.nrm")
     )
     # The threshold lives IN the join condition, after the id
@@ -209,9 +184,7 @@ def embedding_neardup_pairs(
     # Norms are precomputed ONCE before the pair join — norms are O(N),
     # the join is O(pairs); recomputing norms per pair would triple the
     # dominant cost.
-    return neardup_pairs_df(
-        emb, threshold=threshold, dim=_emb_dim(spark, sf_dir)
-    )
+    return neardup_pairs_df(emb, threshold=threshold)
 
 
 def ivf_topk(
@@ -235,9 +208,8 @@ def ivf_topk(
     driver gate checks it at full oracle strength (the DuckDB twin
     replicates centroids → argmax assignment → probing → top-k).
     """
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     cents = emb.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell_id"),
@@ -248,7 +220,7 @@ def ivf_topk(
     def _sim(a, an, b, bn):
         denom = F.col(an) * F.col(bn)
         return F.when(
-            denom > F.lit(0.0), dot_product(F.col(a), F.col(b), dim) / denom
+            denom > F.lit(0.0), dot_product(F.col(a), F.col(b)) / denom
         )
 
     # assign: argmax cosine over broadcast centroids — one pass over the
@@ -435,9 +407,8 @@ def srp_lsh_topk(
     the whole procedure at full hash strength.
     """
     tabs = srp_planes(n_bits, n_tables, seed=seed)
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     base = emb.select(
         "vec_id",
@@ -475,7 +446,7 @@ def srp_lsh_topk(
     )
     denom = F.col("q_nrm") * F.col("c_nrm")
     sim = F.when(
-        denom > F.lit(0.0), dot_product(F.col("q_emb"), F.col("c_emb"), dim) / denom
+        denom > F.lit(0.0), dot_product(F.col("q_emb"), F.col("c_emb")) / denom
     )
     w_k = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
     return (
@@ -493,11 +464,8 @@ def srp_lsh_topk(
     )
 
 
-def _sqdist(vec_col, cent_col, dim: int | None = None) -> "F.Column":
-    """Σ (x_i − c_i)² as the same left-fold both engines run.
-
-    ``dim`` is inert (the round-11 unroll path was deleted in round 12
-    with the rest of the unrollDim knob — see functions.vectors)."""
+def _sqdist(vec_col, cent_col) -> "F.Column":
+    """Σ (x_i − c_i)² as the same left-fold both engines run."""
     return F.aggregate(
         F.zip_with(
             vec_col, cent_col, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)
@@ -507,65 +475,81 @@ def _sqdist(vec_col, cent_col, dim: int | None = None) -> "F.Column":
     )
 
 
-def kmeans_iterations(
-    spark: SparkSession, sf_dir: str, k: int = 8, n_iter: int = 2
-) -> DataFrame:
-    """Deterministic k-means on the embeddings table — the full
-    iterative clustering loop as DataFrame ops (Lloyd's algorithm:
-    argmin-distance assignment ⇄ centroid mean update).
-
-    Per iteration: centroids are k rows, broadcast; assignment is ONE
-    pass with ``min_by`` (map-side partial aggregation, no window);
-    the update is the E30 posexplode + DECIMAL-exact element-sum
-    (order-independent — a double sum would differ per partition
-    count), rebuilt into arrays with an explicit ``sort_array`` on
-    position. No driver action anywhere in the loop — the iteration
-    count is fixed up front, so the whole thing is one lazy plan (the
-    convergence-tested variant is ``dedup.connected_components``'s
-    pattern; both plan-growth strategies are deliberate).
-
-    Init = first ``k`` vectors by vec_id; ties broken by min cell id.
-    Every arithmetic step is an identical-order IEEE fold in both
-    engines, so the DuckDB oracle replays the full loop and the gate
-    hash-matches the final assignment + distance.
-    """
-    dim = _emb_dim(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+def _nearest_cell(points: DataFrame, cents: DataFrame, keys: list[str]) -> DataFrame:
+    """``keys`` + ``cell``: each row of ``points`` (``keys``, ``v``)
+    assigned to its nearest centroid of ``cents`` (cell, c) — argmin
+    ``_sqdist``, ties to the smaller cell. The k-row centroid table is
+    broadcast; ``min_by`` gets map-side partial aggregation, no window."""
+    return (
+        points.join(F.broadcast(cents))
+        .select(*keys, "cell", _sqdist(F.col("v"), F.col("c")).alias("d"))
+        .groupBy(*keys)
+        .agg(F.min_by("cell", F.struct(F.col("d"), F.col("cell"))).alias("cell"))
     )
+
+
+def _cell_means(assigned: DataFrame, key: str) -> DataFrame:
+    """``(key, n, c)``: member count and exact mean of the ``v`` arrays
+    per ``key``. posexplode + DECIMAL(27,10) element sums (order-
+    independent — a double sum would differ per partition count), one
+    double division, rebuilt into arrays with an explicit ``sort_array``
+    on position."""
+    return (
+        assigned.select(key, F.posexplode("v").alias("pos", "val"))
+        .groupBy(key, "pos")
+        .agg(
+            F.sum(F.col("val").cast("decimal(27,10)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .select(key, "pos", "n", (F.col("s").cast("double") / F.col("n")).alias("cval"))
+        .groupBy(key)
+        .agg(
+            F.max("n").alias("n"),
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "cval"))),
+                lambda st: st["cval"],
+            ).alias("c"),
+        )
+    )
+
+
+def _lloyd_centroids(emb: DataFrame, k: int, n_iter: int) -> DataFrame:
+    """(cell, c) after Lloyd's algorithm on ``emb`` (vec_id, v): seeded
+    by the first ``k`` vectors by vec_id, then ``n_iter − 1`` rounds of
+    :func:`_nearest_cell` ⇄ :func:`_cell_means`. The round count is
+    fixed up front, so the whole loop is one lazy plan with no driver
+    action."""
     cents = emb.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("c")
     )
     for _ in range(n_iter - 1):
-        assigned = (
-            emb.join(F.broadcast(cents))
-            .select("vec_id", "v", "cell", _sqdist(F.col("v"), F.col("c"), dim).alias("d"))
-            .groupBy("vec_id", "v")
-            .agg(F.min_by("cell", F.struct(F.col("d"), F.col("cell"))).alias("cell"))
+        cents = _cell_means(_nearest_cell(emb, cents, ["vec_id", "v"]), "cell").select(
+            "cell", "c"
         )
-        cents = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(
-                F.sum(F.col("val").cast("decimal(27,10)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "cell",
-                "pos",
-                (F.col("s").cast("double") / F.col("n")).alias("cval"),
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                    lambda st: st["cval"],
-                ).alias("c")
-            )
-        )
+    return cents
+
+
+def kmeans_iterations(
+    spark: SparkSession, sf_dir: str, k: int = 8, n_iter: int = 2
+) -> DataFrame:
+    """Deterministic k-means on the embeddings table — the full
+    iterative clustering loop as DataFrame ops. The centroids come from
+    the shared Lloyd kernel :func:`_lloyd_centroids` (argmin-distance
+    assignment ⇄ exact DECIMAL mean update, init = first ``k`` vectors
+    by vec_id, ties to the smaller cell); the final pass assigns every
+    vector and also reports its squared distance.
+
+    Every arithmetic step is an identical-order IEEE fold in both
+    engines, so the DuckDB oracle replays the full loop and the gate
+    hash-matches the final assignment + distance.
+    """
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+    cents = _lloyd_centroids(emb, k, n_iter)
     return (
         emb.join(F.broadcast(cents))
-        .select("vec_id", "cell", _sqdist(F.col("v"), F.col("c"), dim).alias("d"))
+        .select("vec_id", "cell", _sqdist(F.col("v"), F.col("c")).alias("d"))
         .groupBy("vec_id")
         .agg(
             F.min_by("cell", F.struct(F.col("d"), F.col("cell"))).alias("cell"),
@@ -596,15 +580,16 @@ def build_ivf_index(
     where=None,
 ) -> None:
     """Build the IVF index at ``index_dir``: Lloyd-refined centroids
-    (seeded by the first ``n_cells`` vectors, ``n_iter − 1`` exact
-    DECIMAL-mean updates — the ``kmeans_iterations`` recipe) written to
+    from the shared kernel :func:`_lloyd_centroids` (seeded by the first
+    ``n_cells`` vectors, ``n_iter − 1`` exact DECIMAL-mean updates —
+    the same centroids as ``kmeans_iterations``) written to
     ``index_dir/centroids`` (cell, c: array<double>), and the full
-    vector→cell assignment to ``index_dir/assignments`` (vec_id, cell).
+    vector→cell assignment (:func:`_nearest_cell`) to
+    ``index_dir/assignments`` (vec_id, cell).
 
     Both writes are plain parquet: mergeable into any catalog, readable
     by any engine, refreshable by re-running this function.
     """
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -612,45 +597,13 @@ def build_ivf_index(
         # restrict the indexed corpus — the base-vs-delta lifecycle
         # hook used by ivf_index_append_topk (E391)
         emb = emb.filter(where)
-    cents = emb.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("c")
-    )
-    for _ in range(n_iter - 1):
-        assigned = (
-            emb.join(F.broadcast(cents))
-            .select("vec_id", "v", "cell", _sqdist(F.col("v"), F.col("c"), dim).alias("d"))
-            .groupBy("vec_id", "v")
-            .agg(F.min_by("cell", F.struct(F.col("d"), F.col("cell"))).alias("cell"))
-        )
-        cents = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(
-                F.sum(F.col("val").cast("decimal(27,10)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "cell", "pos", (F.col("s").cast("double") / F.col("n")).alias("cval")
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                    lambda st: st["cval"],
-                ).alias("c")
-            )
-        )
     import os
 
-    cents.write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
-    cents_t = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    final_assign = (
-        emb.join(F.broadcast(cents_t))
-        .select("vec_id", "cell", _sqdist(F.col("v"), F.col("c"), dim).alias("d"))
-        .groupBy("vec_id")
-        .agg(F.min_by("cell", F.struct(F.col("d"), F.col("cell"))).alias("cell"))
+    _lloyd_centroids(emb, n_cells, n_iter).write.mode("overwrite").parquet(
+        os.path.join(index_dir, "centroids")
     )
-    final_assign.write.mode("overwrite").parquet(
+    cents_t = spark.read.parquet(os.path.join(index_dir, "centroids"))
+    _nearest_cell(emb, cents_t, ["vec_id"]).write.mode("overwrite").parquet(
         os.path.join(index_dir, "assignments")
     )
 
@@ -715,11 +668,10 @@ def ivf_indexed_topk(
     if index_dir is None:
         index_dir = _ivf_index_dir(spark, sf_dir, n_cells, n_iter)
     cents, assign = load_ivf_index(spark, index_dir)
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        l2_norm(F.col("embedding"), dim).alias("nrm"),
+        l2_norm(F.col("embedding")).alias("nrm"),
     )
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
@@ -732,7 +684,7 @@ def ivf_indexed_topk(
         .join(F.broadcast(cents))
         .select(
             "query_id", "q_v", "q_nrm", "cell",
-            _sqdist(F.col("q_v"), F.col("c"), dim).alias("qd"),
+            _sqdist(F.col("q_v"), F.col("c")).alias("qd"),
         )
         .withColumn("rn", F.row_number().over(w_probe))
         .filter(F.col("rn") <= nprobe)
@@ -741,7 +693,7 @@ def ivf_indexed_topk(
     cand = assign.join(emb, "vec_id")
     denom = F.col("q_nrm") * F.col("nrm")
     cos = F.when(
-        denom > F.lit(0.0), dot_product(F.col("q_v"), F.col("v"), dim) / denom
+        denom > F.lit(0.0), dot_product(F.col("q_v"), F.col("v")) / denom
     )
     w_k = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
     return (
@@ -769,48 +721,25 @@ def ivf_index_staleness(
     scheduler thresholds on (drift ≈ 0 ⇒ skip rebuild; the per-label
     twin of ``centroid_drift``). Assignment is recomputed rather than
     read from the persisted table so rows added/changed since the
-    build are scored too. One data scan, exact DECIMAL means,
-    broadcast of the k-row centroid table.
+    build are scored too. One data scan through the Lloyd kernel's two
+    steps (:func:`_nearest_cell`, then :func:`_cell_means`), broadcast
+    of the k-row centroid table.
     """
     if index_dir is None:
         index_dir = _ivf_index_dir(spark, sf_dir, n_cells, n_iter)
     cents, _ = load_ivf_index(spark, index_dir)
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    assign = (
-        emb.join(F.broadcast(cents))
-        .select("vec_id", "v", "cell", _sqdist(F.col("v"), F.col("c"), dim).alias("d"))
-        .groupBy("vec_id", "v")
-        .agg(F.min_by("cell", F.struct(F.col("d"), F.col("cell"))).alias("cell"))
-    )
-    fresh = (
-        assign.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(
-            F.sum(F.col("val").cast("decimal(27,10)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "cell", "pos", "n",
-            (F.col("s").cast("double") / F.col("n")).alias("cval"),
-        )
-        .groupBy("cell")
-        .agg(
-            F.max("n").alias("n_members"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                lambda st: st["cval"],
-            ).alias("fresh_c"),
-        )
+    fresh = _cell_means(_nearest_cell(emb, cents, ["vec_id", "v"]), "cell").select(
+        "cell", F.col("n").alias("n_members"), F.col("c").alias("fresh_c")
     )
     return (
         fresh.join(F.broadcast(cents), "cell")
         .select(
             "cell",
             "n_members",
-            F.round(_sqdist(F.col("fresh_c"), F.col("c"), dim), 6).alias("drift_sqdist"),
+            F.round(_sqdist(F.col("fresh_c"), F.col("c")), 6).alias("drift_sqdist"),
         )
         .orderBy("cell")
     )
@@ -822,13 +751,12 @@ def nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate in embedding space?).
 
     Train = vectors with vec_id % 5 != 0 (deterministic holdout);
-    per-label centroids via the DECIMAL-exact element-sum (E30), then
-    every holdout vector is assigned argmin squared distance over the
-    broadcast centroids (``min_by``, map-side partial agg) and the
+    per-label centroids via the DECIMAL-exact element mean
+    (:func:`_cell_means`, E30), then every holdout vector is assigned
+    to its nearest centroid (:func:`_nearest_cell`) and the
     confusion matrix is one tiny grouped count. One training pass, one
     scoring pass, zero windows.
     """
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -836,43 +764,12 @@ def nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = emb.filter(F.col("vec_id") % 5 != 0)
     test = emb.filter(F.col("vec_id") % 5 == 0)
-    cents = (
-        train.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(
-            F.sum(F.col("val").cast("decimal(27,10)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "label", "pos", (F.col("s").cast("double") / F.col("n")).alias("cval")
-        )
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                lambda st: st["cval"],
-            ).alias("c")
-        )
-        .select(F.col("label").alias("pred_label"), "c")
+    cents = _cell_means(train, "label").select(F.col("label").alias("cell"), "c")
+    return (
+        _nearest_cell(test, cents, ["vec_id", "label"])
+        .groupBy(F.col("label").alias("true_label"), F.col("cell").alias("predicted"))
+        .agg(F.count(F.lit(1)).alias("n_vecs"))
     )
-    scored = (
-        test.join(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "label",
-            "pred_label",
-            _sqdist(F.col("v"), F.col("c"), dim).alias("d"),
-        )
-        .groupBy("vec_id", "label")
-        .agg(
-            F.min_by("pred_label", F.struct(F.col("d"), F.col("pred_label"))).alias(
-                "predicted"
-            )
-        )
-    )
-    return scored.groupBy(
-        F.col("label").alias("true_label"), F.col("predicted")
-    ).agg(F.count(F.lit(1)).alias("n_vecs"))
 
 
 def hybrid_rrf_topk(
@@ -953,20 +850,19 @@ def hybrid_rrf_topk(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = _emb_dim(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding"), dim).alias("q_nrm"),
+        l2_norm(F.col("embedding")).alias("q_nrm"),
     )
     c = emb.select(
         F.col("vec_id").alias("doc_id"),
         F.col("embedding").alias("c_emb"),
-        l2_norm(F.col("embedding"), dim).alias("c_nrm"),
+        l2_norm(F.col("embedding")).alias("c_nrm"),
     )
     denom = F.col("q_nrm") * F.col("c_nrm")
     sim = F.when(
-        denom > F.lit(0.0), dot_product(F.col("q_emb"), F.col("c_emb"), dim) / denom
+        denom > F.lit(0.0), dot_product(F.col("q_emb"), F.col("c_emb")) / denom
     )
     wd = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("doc_id"))
     dense = (
@@ -1214,9 +1110,8 @@ def cluster_topic_terms(
     """
     from parquet_to_csv_spark.functions.textfn import tokens_col
 
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     cents = emb.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell_id"),
@@ -1225,7 +1120,7 @@ def cluster_topic_terms(
     )
     cs = F.when(
         (F.col("nrm") * F.col("cent_nrm")) > F.lit(0.0),
-        dot_product(F.col("embedding"), F.col("cent_emb"), dim)
+        dot_product(F.col("embedding"), F.col("cent_emb"))
         / (F.col("nrm") * F.col("cent_nrm")),
     )
     assigned = (
@@ -1486,15 +1381,11 @@ def truncation_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
     pairs = F.broadcast(q).join(c, F.col("query_id") != F.col("cand_id"))
 
-    unroll = _emb_dim(spark, sf_dir) is not None
-
     def cos_at(length: int):
         qa = F.slice(F.col("q_emb"), 1, length)
         ca = F.slice(F.col("c_emb"), 1, length)
-        num = dot_product(qa, ca, length if unroll else None)
-        den = l2_norm(qa, length if unroll else None) * l2_norm(
-            ca, length if unroll else None
-        )
+        num = dot_product(qa, ca)
+        den = l2_norm(qa) * l2_norm(ca)
         return F.when(den > F.lit(0.0), num / den)
 
     full = cos_at(64)
@@ -1586,9 +1477,8 @@ def cluster_quality_index(spark: SparkSession, sf_dir: str, n_cells: int = 8) ->
     integer 1e-6-unit squares; means are floored integer division; the
     ratio is cross-multiplied ppm — no float aggregation anywhere.
     """
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     cents = emb.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell_id"),
@@ -1597,7 +1487,7 @@ def cluster_quality_index(spark: SparkSession, sf_dir: str, n_cells: int = 8) ->
     )
     cs = F.when(
         (F.col("nrm") * F.col("cent_nrm")) > F.lit(0.0),
-        dot_product(F.col("embedding"), F.col("cent_emb"), dim)
+        dot_product(F.col("embedding"), F.col("cent_emb"))
         / (F.col("nrm") * F.col("cent_nrm")),
     )
     dsq = F.aggregate(
@@ -1838,7 +1728,6 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny argmax relations.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = _emb_dim(spark, sf_dir)
     a = emb.filter(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb"), "label"
     )
@@ -1846,8 +1735,8 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("b_id"), F.col("embedding").alias("b_emb"), "label"
     )
     sim = (
-        dot_product(F.col("a_emb"), F.col("b_emb"), dim)
-        / (l2_norm(F.col("a_emb"), dim) * l2_norm(F.col("b_emb"), dim))
+        dot_product(F.col("a_emb"), F.col("b_emb"))
+        / (l2_norm(F.col("a_emb")) * l2_norm(F.col("b_emb")))
     ).alias("sim")
     scored = a.join(b, "label").select("label", "a_id", "b_id", sim)
     # argmax via max_by on (sim, -id): deterministic tie-break to the
@@ -1904,10 +1793,9 @@ def retrieval_diversity_report(
         F.col("cand_id").alias("cb"),
         F.col("embedding").alias("eb"),
     )
-    dim = _emb_dim(spark, sf_dir)
     sim = F.round(
-        dot_product(F.col("ea"), F.col("eb"), dim)
-        / (l2_norm(F.col("ea"), dim) * l2_norm(F.col("eb"), dim)),
+        dot_product(F.col("ea"), F.col("eb"))
+        / (l2_norm(F.col("ea")) * l2_norm(F.col("eb"))),
         6,
     )
     pair_units = F.expr("CAST(round(pair_sim * 1000000) AS BIGINT)")
@@ -1984,10 +1872,10 @@ def mmr_rerank(
             "ra",
             "cb",
             (
-                dot_product(F.col("ea"), F.col("eb"), _emb_dim(spark, sf_dir))
+                dot_product(F.col("ea"), F.col("eb"))
                 / (
-                    l2_norm(F.col("ea"), _emb_dim(spark, sf_dir))
-                    * l2_norm(F.col("eb"), _emb_dim(spark, sf_dir))
+                    l2_norm(F.col("ea"))
+                    * l2_norm(F.col("eb"))
                 )
             ).alias("raw_sim"),
         )
@@ -2128,12 +2016,12 @@ def centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact long component sums ÷ count); the cosine of two rationals
     needs no division by counts at all (scale invariance — the counts
     cancel), leaving one fixed IEEE pipeline over three exact long
-    dot products. Shape: posexplode to (label, half, dim) partial
+    dot products. Shape: posexplode to (label, half) partial
     sums — pure map-side combine with NO array state in any
     aggregation buffer (a collect_list-then-fold centroid would hold
     a whole group's vectors in one buffer — the memory trap this
     formulation exists to avoid); the per-dimension halves then
-    equi-join on (label, dim) and fold to per-label dot products.
+    equi-join on (label) and fold to per-label dot products.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     comp = emb.select(
@@ -2196,7 +2084,6 @@ def similarity_calibration(
     are exact ppm.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = _emb_dim(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -2208,8 +2095,8 @@ def similarity_calibration(
         F.col("label").alias("c_label"),
     )
     sim = F.round(
-        dot_product(F.col("q_emb"), F.col("c_emb"), dim)
-        / (l2_norm(F.col("q_emb"), dim) * l2_norm(F.col("c_emb"), dim)),
+        dot_product(F.col("q_emb"), F.col("c_emb"))
+        / (l2_norm(F.col("q_emb")) * l2_norm(F.col("c_emb"))),
         6,
     )
     scored = (
@@ -2249,7 +2136,6 @@ def similarity_pr_curve(
     integers.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = _emb_dim(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -2261,8 +2147,8 @@ def similarity_pr_curve(
         F.col("label").alias("c_label"),
     )
     sim = F.round(
-        dot_product(F.col("q_emb"), F.col("c_emb"), dim)
-        / (l2_norm(F.col("q_emb"), dim) * l2_norm(F.col("c_emb"), dim)),
+        dot_product(F.col("q_emb"), F.col("c_emb"))
+        / (l2_norm(F.col("q_emb")) * l2_norm(F.col("c_emb"))),
         6,
     )
     scored = (
@@ -2410,9 +2296,8 @@ def semdedup_prune(
     if index_dir is None:
         index_dir = _ivf_index_dir(spark, sf_dir, n_cells, n_iter)
     _, assign = load_ivf_index(spark, index_dir)
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     cand = assign.join(emb, "vec_id")
     a = cand.select(
@@ -2429,7 +2314,7 @@ def semdedup_prune(
     )
     denom = F.col("n_a") * F.col("n_b")
     cos = F.when(
-        denom > F.lit(0.0), dot_product(F.col("e_a"), F.col("e_b"), dim) / denom
+        denom > F.lit(0.0), dot_product(F.col("e_a"), F.col("e_b")) / denom
     )
     pairs = (
         a.join(b, "cell")
@@ -2466,9 +2351,8 @@ def hard_negative_mining(
     ``max_by`` on the raw IEEE cosine (identical fold both engines)
     with id tie-break, map-side partial aggregation, no windows.
     """
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "label", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     anchors = emb.filter(F.col("vec_id") < n_anchors).select(
         F.col("vec_id").alias("anchor_id"),
@@ -2479,7 +2363,7 @@ def hard_negative_mining(
     denom = F.col("a_nrm") * F.col("nrm")
     cos = F.when(
         denom > F.lit(0.0),
-        dot_product(F.col("a_emb"), F.col("embedding"), dim) / denom,
+        dot_product(F.col("a_emb"), F.col("embedding")) / denom,
     )
     scored = (
         F.broadcast(anchors)
@@ -2540,9 +2424,8 @@ def top_principal_component(
     sign follows the seed deterministically.
     """
     centered, w = _centered_and_top_pc(spark, sf_dir, n_iter)
-    edim = _emb_dim(spark, sf_dir)
     final = centered.join(F.broadcast(w)).select(
-        "c", dot_product(F.col("c"), F.col("w"), edim).alias("s")
+        "c", dot_product(F.col("c"), F.col("w")).alias("s")
     )
     lam = F.broadcast(
         final.agg(
@@ -2572,7 +2455,6 @@ def _centered_and_top_pc(
     mean-centered vector relation (vec_id, c) and the one-row unit
     eigenvector relation (w). See :func:`top_principal_component` for
     the determinism contract."""
-    edim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -2611,7 +2493,7 @@ def _centered_and_top_pc(
     )
     for _ in range(n_iter):
         scored = centered.join(F.broadcast(w)).select(
-            "c", dot_product(F.col("c"), F.col("w"), edim).alias("s")
+            "c", dot_product(F.col("c"), F.col("w")).alias("s")
         )
         upd = (
             scored.select(F.col("s"), F.posexplode("c").alias("pos", "val"))
@@ -2661,19 +2543,18 @@ def embedding_abtt(spark: SparkSession, sf_dir: str, n_iter: int = 2) -> DataFra
     these diagnostics — one scan either way.
     """
     centered, w = _centered_and_top_pc(spark, sf_dir, n_iter)
-    edim = _emb_dim(spark, sf_dir)
     proj = centered.join(F.broadcast(w)).select(
         "vec_id",
         "c",
         "w",
-        dot_product(F.col("c"), F.col("w"), edim).alias("t"),
+        dot_product(F.col("c"), F.col("w")).alias("t"),
     )
     out = proj.select(
         "vec_id",
         F.col("t"),
-        l2_norm(F.col("c"), edim).alias("nb"),
+        l2_norm(F.col("c")).alias("nb"),
         l2_norm(
-            F.zip_with("c", "w", lambda cv, wv: cv - F.col("t") * wv), edim
+            F.zip_with("c", "w", lambda cv, wv: cv - F.col("t") * wv)
         ).alias("na"),
     )
     return out.select(
@@ -2688,7 +2569,7 @@ def label_cohesion_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT E307: per-label MEAN PAIRWISE COSINE without a pair join —
     the sum-vector identity ``Σ_{i≠j} û_i·û_j = ‖Σ û‖² − n`` on
     unit-normalized vectors turns the O(n²) cohesion statistic into
-    ONE O(n) scan (normalize → per-(label, dim) exact component sums
+    ONE O(n) scan (normalize → per-(label) exact component sums
     → ‖·‖² fold on the k×64 relation). THE scale story is the
     algebra: a 10⁹-vector label costs the same per row as a 10³ one.
     Pytest cross-checks the identity against a brute-force numpy pair
@@ -2701,7 +2582,7 @@ def label_cohesion_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "label",
         "embedding",
-        l2_norm(F.col("embedding"), _emb_dim(spark, sf_dir)).alias("nrm"),
+        l2_norm(F.col("embedding")).alias("nrm"),
     )
     unit = emb.filter(F.col("nrm") > 0).select(
         "label",
@@ -2762,11 +2643,10 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     """
     from parquet_to_csv_spark.operators.dedup import _cut_lineage
 
-    dim = _emb_dim(spark, sf_dir)
     denom = F.col("nrm") * F.col("s_nrm")
     dist = F.lit(1.0) - F.when(
         denom > F.lit(0.0),
-        dot_product(F.col("embedding"), F.col("s_emb"), dim) / denom,
+        dot_product(F.col("embedding"), F.col("s_emb")) / denom,
     )
 
     # Round 12 (guide §2.1): the per-round min-distance is INCREMENTAL
@@ -2798,14 +2678,14 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
             "vec_id",
             F.lit(None).cast("double").alias("sel_dist"),
             "embedding",
-            l2_norm(F.col("embedding"), dim).alias("nrm"),
+            l2_norm(F.col("embedding")).alias("nrm"),
         )
         .coalesce(1)
     )
     cand = _cut_lineage(
         load_table(spark, sf_dir, "embeddings")
         .select(
-            "vec_id", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+            "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
         )
         .join(_as_s(seed), F.col("vec_id") != F.col("s_id"))
         .select("vec_id", "embedding", "nrm", dist.alias("md"))
@@ -2853,7 +2733,7 @@ def label_diag_fid(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid distances (means only): two labels can share a centroid
     and still differ in spread.
 
-    One scan → per-(label, dim) DECIMAL-exact Σ and Σ² → per-label
+    One scan → per-(label) DECIMAL-exact Σ and Σ² → per-label
     mean/σ arrays (64-row folds) → k²/2 label pairs on the tiny
     k-label relation. σ uses the population form with one sqrt per
     dim — fixed IEEE order, oracle-identical.
@@ -3010,7 +2890,6 @@ def ivf_index_append_topk(
     from parquet_to_csv_spark.sources.tables import source_salt
 
     salt = source_salt(sf_dir, "embeddings")
-    dim = _emb_dim(spark, sf_dir)
 
     def _build(stage: str) -> None:
         base_pred = md5_bucket(F.col("vec_id"), delta_buckets) != 0
@@ -3028,19 +2907,8 @@ def ivf_index_append_topk(
             )
             .filter(md5_bucket(F.col("vec_id"), delta_buckets) == 0)
         )
-        (
-            delta.join(F.broadcast(cents_t))
-            .select(
-                "vec_id", "cell", _sqdist(F.col("v"), F.col("c"), dim).alias("d")
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.min_by("cell", F.struct(F.col("d"), F.col("cell"))).alias(
-                    "cell"
-                )
-            )
-            .write.mode("append")
-            .parquet(os.path.join(stage, "assignments"))
+        _nearest_cell(delta, cents_t, ["vec_id"]).write.mode("append").parquet(
+            os.path.join(stage, "assignments")
         )
 
     path = claim_artifact(
@@ -3086,7 +2954,7 @@ def embedding_contamination_report(
         "vec_id",
         "label",
         F.col("embedding").alias("e"),
-        l2_norm(F.col("embedding"), _emb_dim(spark, sf_dir)).alias("nrm"),
+        l2_norm(F.col("embedding")).alias("nrm"),
     )
     bench = emb.filter(F.col("label") == 0).select(
         F.col("e").alias("be"), F.col("nrm").alias("bnrm")
@@ -3098,7 +2966,7 @@ def embedding_contamination_report(
             "label",
             "vec_id",
             F.round(
-                dot_product(F.col("e"), F.col("be"), _emb_dim(spark, sf_dir))
+                dot_product(F.col("e"), F.col("be"))
                 / (F.col("nrm") * F.col("bnrm")),
                 6,
             ).alias("cos"),
@@ -3216,17 +3084,17 @@ def knn_shapley_values(
         F.col("vec_id").alias("test_id"),
         F.col("embedding").alias("t_emb"),
         F.col("label").alias("t_label"),
-        l2_norm(F.col("embedding"), _emb_dim(spark, sf_dir)).alias("t_nrm"),
+        l2_norm(F.col("embedding")).alias("t_nrm"),
     )
     train = emb.filter(F.col("vec_id") >= n_test).select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("c_emb"),
         F.col("label").alias("c_label"),
-        l2_norm(F.col("embedding"), _emb_dim(spark, sf_dir)).alias("c_nrm"),
+        l2_norm(F.col("embedding")).alias("c_nrm"),
     )
-    sim = dot_product(
-        F.col("t_emb"), F.col("c_emb"), _emb_dim(spark, sf_dir)
-    ) / (F.col("t_nrm") * F.col("c_nrm"))
+    sim = dot_product(F.col("t_emb"), F.col("c_emb")) / (
+        F.col("t_nrm") * F.col("c_nrm")
+    )
     scored = (
         F.broadcast(test)
         .join(train)
@@ -3327,9 +3195,8 @@ def nndescent_topk(
     the exact brute-force top-k is asserted by pytest (≥ 0.9 on this
     corpus) — same audit contract as E174.
     """
-    dim = _emb_dim(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", l2_norm(F.col("embedding"), dim).alias("nrm")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
     tabs = srp_planes()[:2]
     seeds = None
@@ -3378,7 +3245,7 @@ def nndescent_topk(
                 "a",
                 "b",
                 (
-                    dot_product(F.col("e_a"), F.col("e_b"), dim)
+                    dot_product(F.col("e_a"), F.col("e_b"))
                     / (F.col("n_a") * F.col("n_b"))
                 ).alias("sim"),
             )
@@ -3536,7 +3403,6 @@ def maxsim_late_interaction_topk(
     slots = F.array(*[
         F.slice(F.col("embedding"), 1 + 16 * j, 16) for j in range(4)
     ])
-    dim = _emb_dim(spark, sf_dir)
     base = emb.select("vec_id", F.posexplode(slots).alias("slot", "sub"))
     q = base.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
@@ -3555,11 +3421,7 @@ def maxsim_late_interaction_topk(
             "query_id",
             "cand_id",
             "q_slot",
-            dot_product(
-                F.col("q_sub"),
-                F.col("c_sub"),
-                16 if dim == 64 else None,
-            ).alias("dp"),
+            dot_product(F.col("q_sub"), F.col("c_sub")).alias("dp"),
         )
         .groupBy("query_id", "cand_id")
         .agg(
@@ -3627,8 +3489,6 @@ def ivfpq_topk(
     from pyspark.sql import Window as W
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = _emb_dim(spark, sf_dir)
-    sub = 16 if dim == 64 else None
     cents = F.broadcast(
         emb.filter(F.col("vec_id") < n_cells).select(
             F.col("vec_id").alias("cell_id"),
@@ -3643,7 +3503,7 @@ def ivfpq_topk(
             "embedding",
             "cell_id",
             "cent",
-            dot_product(F.col("embedding"), F.col("cent"), dim).alias("ip"),
+            dot_product(F.col("embedding"), F.col("cent")).alias("ip"),
         )
         .groupBy("vec_id", "embedding")
         .agg(
@@ -3708,7 +3568,7 @@ def ivfpq_topk(
             "query_id",
             "q_emb",
             "cell_id",
-            dot_product(F.col("q_emb"), F.col("cent"), dim).alias("cip"),
+            dot_product(F.col("q_emb"), F.col("cent")).alias("cip"),
         )
         .withColumn("pr", F.row_number().over(w_probe))
         .filter(F.col("pr") <= nprobe)
@@ -3735,7 +3595,7 @@ def ivfpq_topk(
             F.col("vec_id").alias("cand_id"),
             "cip",
             "m",
-            dot_product(F.col("q_sub"), F.col("cw"), sub).alias("p"),
+            dot_product(F.col("q_sub"), F.col("cw")).alias("p"),
         )
         .groupBy("query_id", "cand_id", "cip")
         .agg(
@@ -3773,7 +3633,7 @@ def ivfpq_topk(
         .select(
             "query_id",
             "cand_id",
-            dot_product(F.col("qe"), F.col("ce"), dim).alias("score"),
+            dot_product(F.col("qe"), F.col("ce")).alias("score"),
         )
     )
     w2 = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cand_id"))

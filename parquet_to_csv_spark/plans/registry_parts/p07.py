@@ -518,7 +518,7 @@ def _jtp_oracle(thresholds=(0.7, 0.8, 0.9)) -> str:
     levels = []
     for t in thresholds:
         levels.append(f"""
-SELECT CAST({int(t * 100)} AS BIGINT) AS threshold_pct,
+SELECT CAST({int(round(t * 100))} AS BIGINT) AS threshold_pct,
        coalesce(sum(dg), 0) // 2 AS n_pairs,
        count(*) AS n_docs,
        coalesce(max(dg), 0) AS max_degree

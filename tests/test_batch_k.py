@@ -642,28 +642,39 @@ def test_jaccard_threshold_profile_replay(spark, sf_dir):
 
     pairs = [
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(spark, sf_dir, 0.7).collect()
+        for r in dedup.ngram_jaccard_pairs(spark, sf_dir, 0.57).collect()
     ]
-    expect = {}
-    for t in (0.7, 0.8, 0.9):
-        sel = [(a, b) for a, b, j in pairs if j >= t]
-        deg: dict = defaultdict(int)
-        for a, b in sel:
-            deg[a] += 1
-            deg[b] += 1
-        expect[int(t * 100)] = (
-            len(sel),
-            len(deg),
-            max(deg.values()) if deg else 0,
-        )
-    got = {
-        r.threshold_pct: (r.n_pairs, r.n_docs, r.max_degree)
-        for r in dedup.jaccard_threshold_profile(spark, sf_dir).collect()
-    }
-    assert got == expect
+
+    def replay(thresholds):
+        expect = {}
+        for t in thresholds:
+            sel = [(a, b) for a, b, j in pairs if j >= t]
+            deg: dict = defaultdict(int)
+            for a, b in sel:
+                deg[a] += 1
+                deg[b] += 1
+            expect[int(round(t * 100))] = (
+                len(sel),
+                len(deg),
+                max(deg.values()) if deg else 0,
+            )
+        return expect
+
+    def profile(**kw):
+        return {
+            r.threshold_pct: (r.n_pairs, r.n_docs, r.max_degree)
+            for r in dedup.jaccard_threshold_profile(spark, sf_dir, **kw).collect()
+        }
+
+    got = profile()
+    assert got == replay((0.7, 0.8, 0.9))
     # looser thresholds must dominate tighter ones
     assert got[70][0] >= got[80][0] >= got[90][0]
     assert got[70][0] > 0
+    # 0.57 * 100 is 56.99... in binary floating point: the reported
+    # percent must still be 57
+    assert profile(thresholds=(0.57,)) == replay((0.57,))
+    assert list(replay((0.57,))) == [57]
 
 
 def test_skipgram_pmi_replay(spark, sf_dir):

@@ -1,10 +1,9 @@
-"""Round-11/12 optimization invariants.
+"""Round-11/12 optimization invariants and the shared Lloyd kernel.
 
-1. Round 12 DELETED the round-11 ``spark.graft.vectors.unrollDim``
-   fast path (verdict item 8 — integrated measurement showed the
-   unrolled Catalyst trees regress every consumer). The ``dim=``
-   parameter survives as an inert seam: passing any value (right,
-   wrong, or None) must be a no-op, and the old conf must do nothing.
+1. k-means and the IVF index share one Lloyd kernel
+   (``similarity._lloyd_centroids``): ``kmeans_iterations`` cells and
+   ``build_ivf_index`` assignments must agree row for row, and the
+   staleness report over that index must count every vector once.
 2. The PPJoin positional filter added to ``ngram_jaccard_pairs`` must
    not change the verified pair relation (it only prunes candidate rows
    that can never verify): pinned against a filter-free replica of the
@@ -16,7 +15,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_to_csv_spark.functions.vectors import dot_product, l2_norm
 from parquet_to_csv_spark.operators import dedup, similarity
 from parquet_to_csv_spark.sources.tables import load_table
 
@@ -25,46 +23,15 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_dim_param_inert_expressions(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
-    pairs = a.join(b, F.col("a") % 7 == F.col("b") % 7)
-    slow = pairs.select(
-        "a", "b",
-        dot_product(F.col("ea"), F.col("eb")).alias("d"),
-        l2_norm(F.col("ea")).alias("n"),
-        similarity._sqdist(F.col("ea"), F.col("eb")).alias("s"),
-    )
-    fast = pairs.select(
-        "a", "b",
-        dot_product(F.col("ea"), F.col("eb"), 64).alias("d"),
-        l2_norm(F.col("ea"), 64).alias("n"),
-        similarity._sqdist(F.col("ea"), F.col("eb"), 64).alias("s"),
-    )
-    assert _rows(slow) == _rows(fast)  # exact ==, not approx: bit parity
-
-
-def test_dim_param_wrong_value_inert(spark, sf_dir):
-    """Even a wrong dim must be a no-op — the parameter is dead."""
-    emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    wrong = emb.select(dot_product(F.col("embedding"), F.col("embedding"), 63).alias("d"))
-    right = emb.select(dot_product(F.col("embedding"), F.col("embedding")).alias("d"))
-    assert _rows(wrong) == _rows(right)
-
-
-def test_unroll_conf_deleted(spark, sf_dir):
-    """The old conf must change nothing: _emb_dim is constant None and
-    cosine_topk plans/results are identical with the conf set."""
-    assert similarity._emb_dim(spark, sf_dir) is None
-    base = _rows(similarity.cosine_topk(spark, sf_dir))
-    spark.conf.set("spark.graft.vectors.unrollDim", "true")
-    try:
-        assert similarity._emb_dim(spark, sf_dir) is None
-        fast = _rows(similarity.cosine_topk(spark, sf_dir))
-    finally:
-        spark.conf.unset("spark.graft.vectors.unrollDim")
-    assert base == fast
+def test_kmeans_and_ivf_index_share_lloyd_kernel(spark, sf_dir, tmp_path):
+    index_dir = str(tmp_path / "ivf")
+    similarity.build_ivf_index(spark, sf_dir, index_dir, n_cells=8, n_iter=2)
+    _, assign = similarity.load_ivf_index(spark, index_dir)
+    km = similarity.kmeans_iterations(spark, sf_dir, k=8, n_iter=2)
+    assert _rows(km.select("vec_id", "cell")) == _rows(assign.select("vec_id", "cell"))
+    stale = similarity.ivf_index_staleness(spark, sf_dir, index_dir=index_dir)
+    n_vecs = load_table(spark, sf_dir, "embeddings").count()
+    assert sum(r["n_members"] for r in stale.collect()) == n_vecs
 
 
 @pytest.fixture(scope="module")

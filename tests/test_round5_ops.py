@@ -3,6 +3,8 @@ unblocked prefix-filter edge path."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from parquet_to_csv_spark.operators import dedup
@@ -66,6 +68,20 @@ def test_unblocked_edges_artifact_kept_apart_from_blocked(spark, sf_dir):
     # neither artifact serves the other (no key bleed)
     assert blocked_edges < unblocked_edges
     assert _pairset(dedup.dedup_edges(spark, sf_dir, 0.8)) == blocked_edges
+
+
+def test_unblocked_edges_key_rounds_threshold(spark, sf_dir, art_root):
+    """0.57 * 10000 is 5699.99... in binary floating point: a 0.57 call
+    after a 0.5699 call must commit its own ``ubedges_t5700_*`` artifact,
+    not be served the wider 0.5699 edge set."""
+    wide = _pairset(dedup._unblocked_edges(spark, sf_dir, 0.5699))
+    got = _pairset(dedup._unblocked_edges(spark, sf_dir, 0.57))
+    keys = sorted(k for k in os.listdir(art_root) if k.startswith("ubedges_"))
+    assert [k.split("_")[1] for k in keys] == ["t5699", "t5700"]
+    assert got == _pairset(
+        dedup.ngram_jaccard_pairs(spark, sf_dir, 0.57, blocked=False)
+    )
+    assert got <= wide
 
 
 def test_backpressure_drain_splits_batches(spark, sf_dir):

@@ -11,7 +11,13 @@ bench's own session defaults:
 - ``collect`` — the bench's own timed action (plan + execute + collect)
 
 Best-of-N per query (default 3).  Optionally dumps the formatted plan
-to a file (``--plans DIR``) — the plans/r11 deliverable.
+to a file (``--plans DIR``) — the plans/r11 deliverable.  Dumps are
+masked (expression ids, lambda-variable counters, artifact ``stage-*``
+directories and temp paths), so dumps of two checkouts diff cleanly:
+
+  python tools/qtime.py --runs 1 --plans /tmp/p_before name ...  # parent
+  python tools/qtime.py --runs 1 --plans /tmp/p_after name ...   # change
+  diff -r /tmp/p_before /tmp/p_after
 
 Usage:
   python tools/qtime.py [--runs N] [--plans DIR] [--sf DIR] name [name ...]
@@ -24,13 +30,26 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_to_csv_spark.plans.registry import QUERIES  # noqa: E402
 from parquet_to_csv_spark.session import get_spark  # noqa: E402
+
+
+def mask_plan(txt: str) -> str:
+    """A plan dump with everything that varies between processes on
+    the same code masked: ``#123`` expression ids, the global counters
+    of lambda variables (``x_17``), committed artifact ``stage-*``
+    directories and paths under the temp directory."""
+    txt = re.sub(r"#\d+", "#", txt)
+    txt = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1_*", txt)
+    txt = re.sub(r"stage-[^/\s\],]+", "stage-*", txt)
+    return re.sub(re.escape(tempfile.gettempdir()) + r"/[^/\s\],]+", "<tmp>", txt)
 
 
 def measure(spark, name, fn, sf_dir, runs, plans_dir=None, suffix=""):
@@ -66,7 +85,7 @@ def measure(spark, name, fn, sf_dir, runs, plans_dir=None, suffix=""):
     if plans_dir and plan_txt is not None:
         os.makedirs(plans_dir, exist_ok=True)
         with open(os.path.join(plans_dir, f"{name}{suffix}.txt"), "w") as f:
-            f.write(plan_txt)
+            f.write(mask_plan(plan_txt))
     return {k: round(min(v), 3) for k, v in out.items()}
 
 
@@ -89,8 +108,6 @@ def main() -> None:
             (k for k in bo if k in QUERIES), key=lambda k: -bo[k]
         )
         names.extend(k for k in ranked[: args.top] if k not in names)
-
-    import tempfile
 
     os.environ.setdefault(
         "SPARK_GRAFT_ARTIFACT_DIR", tempfile.mkdtemp(prefix="qtime_artifacts_")
