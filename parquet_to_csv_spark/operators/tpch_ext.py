@@ -268,23 +268,32 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
-    """TPC-H Q21 (adapted): per supplier, count the multi-supplier
-    orders where that supplier shipped last.
+    """TPC-H Q21 (adapted): per supplier, count its lineitems that
+    shipped last in a multi-supplier order.
 
     Spec semantics (receipt>commit lateness) need columns the testdata
     lacks; the adaptation keeps the EXISTS(other supplier in order) ∧
     NOT EXISTS(other supplier shipped later) correlated structure. The
     Spark plan decorrelates it into aggregations: per (order, supplier)
-    max ship date, per order the global max and supplier count — a
-    supplier qualifies iff it attains the order max and the order has
-    ≥2 suppliers. Two keyed exchanges + one window-free join; the
-    DuckDB oracle keeps the literal EXISTS/NOT EXISTS form, so the
-    parity check proves the decorrelation. Top-k via
-    TakeOrderedAndProject (deterministic tiebreak on name).
+    max ship date and the number of its lineitems shipped on that date,
+    per order the global max and supplier count — a supplier qualifies
+    iff it attains the order max and the order has ≥2 suppliers, and
+    contributes its lineitems at the max. The DuckDB oracle keeps the
+    literal EXISTS/NOT EXISTS form, so the parity check proves the
+    decorrelation. Top-k via TakeOrderedAndProject (deterministic
+    tiebreak on name).
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    per_os = li.groupBy("l_orderkey", "l_suppkey").agg(F.max("l_shipdate").alias("s_max"))
+    per_os = (
+        li.groupBy("l_orderkey", "l_suppkey", "l_shipdate")
+        .agg(F.count(F.lit(1)).alias("n_lines"))
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(
+            F.max("l_shipdate").alias("s_max"),
+            F.max_by("n_lines", "l_shipdate").alias("n_at_max"),
+        )
+    )
     per_o = per_os.groupBy("l_orderkey").agg(
         F.max("s_max").alias("o_max"), F.count(F.lit(1)).alias("n_supp")
     )
@@ -294,7 +303,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str, k: int = 20) -> DataF
     )
     return (
         blamed.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("numwait"))
+        .agg(F.sum("n_at_max").alias("numwait"))
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_name", "numwait")
         .orderBy(F.desc("numwait"), F.asc("s_name"))

@@ -632,38 +632,133 @@ def latest_version(table_dir: str) -> int | None:
 # lives in immutable ``segments/s-*.json`` files written ONCE by the commit
 # that created them and re-referenced verbatim by every later commit.
 #
-# Why this is the 100×-scale fix: pre-round-8 every ``v{N}.json`` listed
-# EVERY live file, so commit AND read metadata cost grew with table size
-# (O(10^6) file paths serialized per commit on a 100 TB table). Now an
+# Why this is the 100×-scale fix: a single-level manifest listing EVERY
+# live file makes commit AND read metadata cost grow with table size
+# (O(10^6) file paths serialized per commit on a 100 TB table). Here an
 # append writes one new segment (∝ files it adds) plus a manifest list
 # (∝ number of segments ≈ number of commits since last OPTIMIZE), a
 # delete-vector commit appends one delete segment, and OPTIMIZE naturally
 # compacts the segment count back to 1. Commit bytes are ∝ files TOUCHED.
 #
-# Legacy single-level manifests (a ``files`` key) remain readable — every
-# consumer goes through the accessors below.
+# Every manifest carries ``segments`` and ``schema`` (plus
+# ``delete_segments`` / ``merge_schema`` when set); there is no other
+# manifest format. Every manifest is published by ONE primitive,
+# :func:`_commit_next` — Delta's log protocol (put-if-absent record N+1,
+# retry on a lost race) — and the latest snapshot is resolved by ONE
+# resolver, :func:`_latest_manifest`.
 # --------------------------------------------------------------------------
 
 # Segment manifests are immutable, so the cache can never serve stale
 # content — but it IS shared by true-thread concurrent writers (the
-# round-8 stress tests), so both memo dicts are guarded by one lock and
-# bounded by LRU eviction (round 9: the previous clear-all at capacity
-# forced every cached segment to be re-read at once on a hot
-# multi-table driver; _LEGACY_WRAP_CACHE was unbounded).
+# round-8 stress tests), so it is guarded by a lock and bounded by LRU
+# eviction (round 9: the previous clear-all at capacity forced every
+# cached segment to be re-read at once on a hot multi-table driver).
 _SEGMENT_CACHE: _OrderedDict[str, dict] = _OrderedDict()
 _SEGMENT_CACHE_MAX = 8192
-_LEGACY_WRAP_CACHE: _OrderedDict[tuple, list[dict]] = _OrderedDict()
-_LEGACY_WRAP_CACHE_MAX = 1024
 _CACHE_LOCK = _threading.Lock()
 
 # columns stats are collected for must be JSON-round-trippable
 _STATS_OK_TYPES = (bool, int, float, str)
+
+# re-resolutions of the latest version after a concurrent vacuum
+# deleted the manifest just resolved
+_RESOLVE_ATTEMPTS = 5
 
 
 def _load_manifest(table_dir: str, version: int) -> dict:
     import json
 
     return json.load(open(_manifest_path(table_dir, version)))
+
+
+def _latest_manifest(table_dir: str, empty_ok: bool = False):
+    """``(version, manifest)`` of the newest snapshot — the only
+    latest-version resolver. A concurrent :func:`vacuum` can delete the
+    manifest of the version just resolved (a racer committed past it
+    and raised the retention cutoff): that is a lost race, so resolve
+    again, a bounded number of times. An empty table raises
+    ``ValueError``, or gives ``(None, None)`` with ``empty_ok`` (the
+    v0 commit)."""
+    for attempt in range(_RESOLVE_ATTEMPTS):
+        version = latest_version(table_dir)
+        if version is None:
+            if empty_ok:
+                return None, None
+            raise ValueError(f"no snapshots in {table_dir}")
+        try:
+            return version, _load_manifest(table_dir, version)
+        except FileNotFoundError:
+            if attempt == _RESOLVE_ATTEMPTS - 1:
+                raise
+
+
+def _commit_next(
+    table_dir: str, make_manifest, max_attempts: int = 5, on_lost=None
+) -> int:
+    """Publish the table's next snapshot; returns its version. Every
+    manifest of the store is written here.
+
+    Each attempt resolves the latest ``(prev, man)`` (``(None, None)``
+    on an empty table), asks ``make_manifest(prev, man)`` for the
+    manifest built on it, stamps ``version`` = prev + 1 and ``ts``, and
+    publishes it put-if-absent at ``manifests/v{version}.json`` — the
+    atomic commit point (``rename`` would silently replace a racer's
+    snapshot). A lost publish runs ``on_lost()`` (the losing attempt's
+    cleanup) and retries on top of the new latest: optimistic
+    concurrency, bounded so livelock fails loudly. ``make_manifest``
+    returns ``None`` for "nothing to commit" (then ``prev`` is
+    returned) and raises for a conflict it cannot rebase."""
+    import os
+
+    os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
+    version = None
+    for _ in range(max_attempts):
+        prev, man = _latest_manifest(table_dir, empty_ok=True)
+        manifest = make_manifest(prev, man)
+        if manifest is None:
+            return prev
+        version = 0 if prev is None else prev + 1
+        if _put_if_absent(
+            _manifest_path(table_dir, version),
+            {**manifest, "version": version, "ts": _time.time()},
+        ):
+            return version
+        if on_lost is not None:
+            on_lost()
+    raise RuntimeError(
+        f"concurrent commit: lost the race for versions up to {version} in "
+        f"{table_dir} {max_attempts} times; giving up"
+    )
+
+
+def _planned_on(planned, manifest: dict, conflict: str):
+    """``make_manifest`` of a single-shot commit (OPTIMIZE, RESTORE, a
+    fork's v0) planned on version ``planned`` (None: an empty table):
+    any other latest raises the ``conflict`` — the commit cannot be
+    rebased on a snapshot it was not computed from."""
+
+    def make(prev, _man):
+        if prev != planned:
+            raise RuntimeError(conflict)
+        return manifest
+
+    return make
+
+
+def _carry(man: dict, *keys: str) -> dict:
+    """The ``keys`` a new manifest carries over from ``man`` (those set)."""
+    return {k: man[k] for k in keys if man.get(k)}
+
+
+def _parquet_files(data_dir: str) -> list[str]:
+    """The sorted parquet files a writer left under ``data_dir``."""
+    import os
+
+    return sorted(
+        os.path.join(data_dir, f)
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet")
+    )
 
 
 def _seg_cache_put(path: str, seg: dict) -> None:
@@ -727,20 +822,11 @@ def _write_segment(
     partitions: dict | None = None,
 ) -> dict:
     """Write one immutable segment manifest for ``files`` and return its
-    manifest-list ENTRY (path + n_files/n_rows + rolled-up column
-    bounds). Cost ∝ len(files): one footer read per NEW file — exactly
-    the files this commit touched."""
-    import json
-    import os
-    import uuid
-
-    seg_dir = os.path.join(table_dir, "segments")
-    os.makedirs(seg_dir, exist_ok=True)
+    manifest-list ENTRY (see :func:`_segment_entry`). Cost ∝
+    len(files): one footer read per NEW file — exactly the files this
+    commit touched."""
     per_rows: dict[str, int] = {}
     per_stats: dict[str, dict] = {}
-    roll: dict = {}
-    col_cover: dict[str, int] = {}
-    n_rows = 0
     for f in files:
         try:
             nr, bounds = _file_footer_stats(f) if collect_stats else (None, {})
@@ -752,58 +838,67 @@ def _write_segment(
             bounds = {}
         if nr is not None:
             per_rows[f] = nr
-            n_rows += nr
         if bounds:
             per_stats[f] = bounds
-            for col, (lo, hi) in bounds.items():
-                col_cover[col] = col_cover.get(col, 0) + 1
-                cur = roll.get(col)
-                if cur is None:
-                    roll[col] = [lo, hi]
-                else:
-                    roll[col] = [min(cur[0], lo), max(cur[1], hi)]
-    # a rollup bound is only sound for segment-level pruning if EVERY
-    # file in the segment contributed bounds for that column — a
-    # partial rollup would let level-1 pruning skip a bounds-less file
-    # that may contain matching rows (the conservative contract)
-    roll = {c: b for c, b in roll.items() if col_cover.get(c) == len(files)}
-    seg = {"files": list(files)}
+    seg: dict = {"files": list(files)}
     if per_rows:
         seg["n_rows"] = per_rows
     if per_stats:
         seg["stats"] = per_stats
-    pstats: dict = {}
     if partitions:
         seg["partitions"] = partitions
-        # rollup of partition-transform values across the segment's
-        # files, only for transforms EVERY file carries (partition
-        # evolution makes per-file tuples heterogeneous; a transform
-        # absent from any file is not segment-prunable)
-        common = None
-        for tup in partitions.values():
-            keys = set(tup)
-            common = keys if common is None else common & keys
-        for name in sorted(common or ()):
-            vals = [tup[name] for tup in partitions.values()]
-            pstats[name] = [min(vals), max(vals)]
+    return _segment_entry(table_dir, seg, kind)
+
+
+def _segment_entry(table_dir: str, seg: dict, kind: str = "data") -> dict:
+    """Persist the segment manifest ``seg`` — ``files`` plus optional
+    per-file ``n_rows``, ``stats`` ({col: [min, max]}) and
+    ``partitions`` (transform tuples) — and return its manifest-list
+    entry: path, n_files and the rollups a planner prunes WHOLE
+    segments on without opening the segment JSON (E454 at the segment
+    grain). Every rollup is only sound if EVERY file of the segment
+    contributed to it — a partial rollup would let level-1 pruning skip
+    a file without bounds (or tuple) that may hold matching rows, the
+    conservative contract — so each one is guarded by full coverage."""
+    import json
+    import os
+    import uuid
+
+    files = seg["files"]
+    rows = seg.get("n_rows", {})
+    parts = seg.get("partitions", {})
+    roll: dict = {}
+    cover: dict[str, int] = {}
+    for bounds in seg.get("stats", {}).values():
+        for col, (lo, hi) in bounds.items():
+            cover[col] = cover.get(col, 0) + 1
+            cur = roll.get(col)
+            roll[col] = (
+                [lo, hi] if cur is None else [min(cur[0], lo), max(cur[1], hi)]
+            )
+    roll = {c: b for c, b in roll.items() if cover[c] == len(files)}
+    # partition evolution makes per-file tuples heterogeneous: roll up
+    # only the transforms every tuple carries
+    common = None
+    for tup in parts.values():
+        common = set(tup) if common is None else common & set(tup)
+    pstats = {
+        name: [min(t[name] for t in parts.values()),
+               max(t[name] for t in parts.values())]
+        for name in sorted(common or ())
+    }
+    seg_dir = os.path.join(table_dir, "segments")
+    os.makedirs(seg_dir, exist_ok=True)
     path = os.path.join(seg_dir, f"s-{uuid.uuid4().hex[:16]}.json")
     with open(path, "w") as f:
         json.dump(seg, f)
     _seg_cache_put(path, seg)
     entry = {"path": path, "kind": kind, "n_files": len(files)}
-    if per_rows and len(per_rows) == len(files):
-        entry["n_rows"] = n_rows
+    if rows and len(rows) == len(files):
+        entry["n_rows"] = sum(rows.values())
     if roll:
-        # rolled-up bounds let a planner prune WHOLE segments from the
-        # manifest list without opening the segment JSON (E454 at the
-        # segment grain)
         entry["stats"] = roll
-    if pstats and len(partitions) == len(files):
-        # full-file-coverage guard (same soundness rule as the column
-        # rollup above and as rewrite_segments): a segment-level
-        # partition rollup is only sound for level-1 pruning if EVERY
-        # file contributed a tuple — otherwise skipping the segment
-        # would skip tuple-less files the per-file path keeps.
+    if pstats and len(parts) == len(files):
         entry["pstats"] = pstats
     return entry
 
@@ -837,70 +932,14 @@ def _claim_data_dir(table_dir: str, prefix: str) -> str:
     return alt
 
 
-def _legacy_wrap_get(key: tuple) -> list[dict] | None:
-    with _CACHE_LOCK:
-        cached = _LEGACY_WRAP_CACHE.get(key)
-        if cached is not None:
-            _LEGACY_WRAP_CACHE.move_to_end(key)
-        return cached
-
-
-def _legacy_wrap_put(key: tuple, entries: list[dict]) -> None:
-    with _CACHE_LOCK:
-        _LEGACY_WRAP_CACHE[key] = entries
-        _LEGACY_WRAP_CACHE.move_to_end(key)
-        while len(_LEGACY_WRAP_CACHE) > _LEGACY_WRAP_CACHE_MAX:
-            _LEGACY_WRAP_CACHE.popitem(last=False)
-
-
 def _man_data_segments(table_dir: str, man: dict) -> list[dict]:
-    """Manifest-list entries for the snapshot's DATA segments. A legacy
-    single-level manifest is wrapped ONCE per (table, version) by
-    persisting its file list as one segment — memoized so commit retry
-    loops on pre-round-8 tables don't re-read every footer and litter
-    orphan segments per iteration (manifests are immutable, so the
-    cache can never go stale; racing wraps are benign — the loser's
-    segment is merely unreferenced and reclaimed by vacuum)."""
-    if "segments" in man:
-        return man["segments"]
-    key = (table_dir, "data", man.get("version"))
-    cached = _legacy_wrap_get(key)
-    if cached is None or man.get("version") is None:
-        cached = [
-            _write_segment(
-                table_dir,
-                man.get("files", []),
-                partitions=man.get("partitions") or None,
-            )
-        ]
-        if man.get("version") is not None:
-            _legacy_wrap_put(key, cached)
-    return cached
-
-
-def _man_delete_segments(table_dir: str, man: dict) -> list[dict]:
-    if "segments" in man:
-        return man.get("delete_segments", [])
-    dels = man.get("delete_files", [])
-    if not dels:
-        return []
-    key = (table_dir, "delete", man.get("version"))
-    cached = _legacy_wrap_get(key)
-    if cached is None or man.get("version") is None:
-        cached = [_write_segment(table_dir, dels, kind="delete")]
-        if man.get("version") is not None:
-            _legacy_wrap_put(key, cached)
-    return cached
+    """Manifest-list entries for the snapshot's DATA segments."""
+    return man["segments"]
 
 
 def _man_files(table_dir: str, man: dict) -> list[str]:
     """Every live data file of a snapshot, in segment order."""
-    if "segments" not in man:
-        return man["files"]
-    out: list[str] = []
-    for e in man["segments"]:
-        out.extend(_seg_load(e)["files"])
-    return out
+    return list(_iter_man_files(table_dir, man))
 
 
 def _iter_man_files(table_dir: str, man: dict):
@@ -908,9 +947,6 @@ def _iter_man_files(table_dir: str, man: dict):
     (round 11, verdict note): consumers that stream — counts, orphan
     sweeps, chunked read handoff — never hold more than one segment's
     path list in Python memory at ~10⁶ live files."""
-    if "segments" not in man:
-        yield from man["files"]
-        return
     for e in man["segments"]:
         yield from _seg_load(e)["files"]
 
@@ -919,8 +955,6 @@ def _man_n_files(table_dir: str, man: dict) -> int:
     """Live-file COUNT from the manifest-list ``n_files`` rollups —
     O(list length), zero segment JSONs opened. An entry missing the
     rollup (foreign writer) falls back to loading just that segment."""
-    if "segments" not in man:
-        return len(man["files"])
     total = 0
     for e in man["segments"]:
         n = e.get("n_files")
@@ -930,30 +964,16 @@ def _man_n_files(table_dir: str, man: dict) -> int:
 
 def _man_delete_files(table_dir: str, man: dict) -> list[str]:
     """Every delete-vector sidecar file of a snapshot."""
-    if "segments" not in man:
-        return man.get("delete_files", [])
     out: list[str] = []
     for e in man.get("delete_segments", []):
         out.extend(_seg_load(e)["files"])
     return out
 
 
-def _man_partitions(table_dir: str, man: dict) -> dict:
-    """file → transform-tuple map across all data segments (E487)."""
-    if "segments" not in man:
-        return man.get("partitions", {})
-    out: dict = {}
-    for e in man["segments"]:
-        out.update(_seg_load(e).get("partitions", {}))
-    return out
-
-
 def _man_file_rows(table_dir: str, man: dict) -> dict[str, int]:
     """file → row count, from segment metadata where recorded."""
-    if "segments" not in man:
-        return {}
     out: dict[str, int] = {}
-    for e in man.get("segments", []) + man.get("delete_segments", []):
+    for e in man["segments"] + man.get("delete_segments", []):
         out.update(_seg_load(e).get("n_rows", {}))
     return out
 
@@ -963,8 +983,6 @@ def _man_file_stats(table_dir: str, man: dict, col: str) -> dict[str, tuple]:
     recorded bounds map to (None, None) — callers treat those
     conservatively (E454's contract)."""
     out: dict[str, tuple] = {}
-    if "segments" not in man:
-        return out
     for e in man["segments"]:
         seg = _seg_load(e)
         stats = seg.get("stats", {})
@@ -979,49 +997,35 @@ def _segments_without(
 ) -> list[dict]:
     """Segment entries after dropping ``remove`` files: untouched
     segments are carried BY REFERENCE (zero bytes written); a touched
-    segment is rewritten with only its survivors (1 segment rewrite per
-    touched segment — the O(files-touched) contract); emptied segments
+    segment is rewritten with only its survivors and their recorded
+    per-file metadata (1 segment rewrite per touched segment, no footer
+    re-read — the O(files-touched) contract); emptied segments
     vanish."""
     out: list[dict] = []
     for e in entries:
         seg = _seg_load(e)
-        files = seg["files"]
-        hit = [f for f in files if f in remove]
-        if not hit:
+        survivors = [f for f in seg["files"] if f not in remove]
+        if len(survivors) == len(seg["files"]):
             out.append(e)
             continue
-        survivors = [f for f in files if f not in remove]
         if not survivors:
             continue
-        out.append(
-            _write_segment(
-                table_dir,
-                survivors,
-                kind=e.get("kind", "data"),
-                partitions={
-                    f: t
-                    for f, t in seg.get("partitions", {}).items()
-                    if f in set(survivors)
-                }
-                or None,
-            )
-        )
+        kept = set(survivors)
+        sub: dict = {"files": survivors}
+        for k in ("n_rows", "stats", "partitions"):
+            per_file = {f: v for f, v in seg.get(k, {}).items() if f in kept}
+            if per_file:
+                sub[k] = per_file
+        out.append(_segment_entry(table_dir, sub, e.get("kind", "data")))
     return out
 
 
-def _table_schema(spark: SparkSession, man: dict, table_dir: str | None = None):
-    """Authoritative schema of a committed snapshot: the manifest's
-    recorded schema when present (manifests record it since round 7),
-    else derived from the live files (mergeSchema-aware fallback for
-    manifests written before schemas were recorded)."""
+def _table_schema(man: dict):
+    """Authoritative schema of a committed snapshot: the one its
+    manifest records (every manifest writer records it)."""
     from pyspark.sql.types import StructType
 
-    if "schema" in man:
-        return StructType.fromJson(man["schema"])
-    reader = spark.read
-    if man.get("merge_schema"):
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*_man_files(table_dir or "", man)).schema
+    return StructType.fromJson(man["schema"])
 
 
 def _evolved_schema(table_schema, df_schema, merge_schema: bool):
@@ -1086,13 +1090,10 @@ def commit_version(
     size. Readers resolve a manifest list, never a directory listing,
     so concurrent or failed writes can't tear a snapshot.
 
-    The manifest write is the atomic commit point, PUT-IF-ABSENT via
-    ``os.link`` (rename() silently replaces, which would drop the
-    winner's snapshot). A loser re-reads ``latest_version`` and
-    retries at the next number — Delta/Iceberg's optimistic
-    concurrency, bounded at ``max_attempts`` so livelock fails loudly.
-    On an append retry the live-file base is re-read from the NEW
-    latest manifest, so both racers' rows land.
+    The manifest is published by :func:`_commit_next` (put-if-absent,
+    optimistic retries bounded at ``max_attempts``). On an append
+    retry the live-file base is re-read from the NEW latest manifest,
+    so both racers' rows land.
 
     ``base_version`` (E491): append relative to THAT version's live
     files instead of the latest manifest — the transactional append,
@@ -1101,34 +1102,20 @@ def commit_version(
     into this commit's lineage. Version NUMBERING still advances past
     latest (manifests are immutable history).
     """
-    import json
-    import os
-
     if mode not in ("append", "overwrite"):
         raise ValueError(mode)
     _enforce_constraints(spark, table_dir, df)
-    prev = latest_version(table_dir)
-    base_for_schema = base_version if base_version is not None else prev
-    if mode == "append" and base_for_schema is not None:
-        # validate BEFORE writing data files so a schema rejection
-        # leaves no orphans; the retry loop re-validates against
-        # whatever manifest is the append base at commit time.
-        try:
-            _evolved_schema(
-                _table_schema(
-                    spark,
-                    _load_manifest(table_dir, base_for_schema),
-                    table_dir,
-                ),
-                df.schema,
-                merge_schema,
-            )
-        except FileNotFoundError:
-            if base_version is not None:
-                raise  # pinned base reclaimed by retention — genuine error
-            pass  # lost race with vacuum; the retry loop re-validates
-    guess = 0 if prev is None else prev + 1
-    data_dir = _claim_data_dir(table_dir, f"v{guess}")
+    prev, man = _latest_manifest(table_dir, empty_ok=True)
+    if mode == "append":
+        if base_version is not None:
+            # a pinned base that retention reclaimed is a genuine error
+            man = _load_manifest(table_dir, base_version)
+        if man is not None:
+            # validate BEFORE writing data files so a schema rejection
+            # leaves no orphans; each attempt re-validates against
+            # whatever manifest is the append base at commit time.
+            _evolved_schema(_table_schema(man), df.schema, merge_schema)
+    data_dir = _claim_data_dir(table_dir, f"v{0 if prev is None else prev + 1}")
     # append, NEVER overwrite: Spark's overwrite deletes the output
     # directory before writing, which momentarily destroys the mkdir
     # claim itself — a concurrent process could then win claim_dir()
@@ -1138,68 +1125,71 @@ def commit_version(
     # stress). The claimed dir is exclusively owned and empty, so
     # append has identical semantics while keeping the claim alive.
     df.write.mode("append").parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
     # ONE new segment for this commit's files (footer stats embedded);
     # valid across retries — segment manifests are commit-independent.
-    new_entry = _write_segment(table_dir, new_files)
-    os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
-    version = guess
-    for _ in range(max_attempts):
-        prev = latest_version(table_dir)
-        version = 0 if prev is None else prev + 1
-        seg_entries: list[dict] = []
-        # append must CARRY FORWARD any position delete vectors (E426):
-        # they bind to files that remain live; overwrite drops both the
-        # files and their deletes.
-        carried_del_entries: list[dict] = []
-        schema = df.schema
-        evolved = False
-        base = base_version if base_version is not None else prev
-        if mode == "append" and base is not None:
-            try:
-                prev_man = _load_manifest(table_dir, base)
-            except FileNotFoundError:
-                if base_version is not None:
-                    raise  # caller pinned a base that retention reclaimed
-                # Round-10 ADVICE (medium): the base we resolved via
-                # latest_version() was vacuumed between resolution and
-                # load — a racer committed a newer version and raised
-                # the retention cutoff. That is a LOST RACE, not an
-                # error: re-resolve latest and retry on top of it.
-                continue
-            seg_entries = list(_man_data_segments(table_dir, prev_man))
-            carried_del_entries = list(
-                _man_delete_segments(table_dir, prev_man)
-            )
-            schema, evolved = _evolved_schema(
-                _table_schema(spark, prev_man, table_dir),
-                df.schema,
-                merge_schema,
-            )
-            evolved = evolved or bool(prev_man.get("merge_schema"))
+    new_entry = _write_segment(table_dir, _parquet_files(data_dir))
+
+    def make(prev, man):
+        base = man
+        if mode == "append" and base_version is not None:
+            base = _load_manifest(table_dir, base_version)
+        if mode == "overwrite" or base is None:
+            return {
+                "mode": mode,
+                "segments": [new_entry],
+                "schema": df.schema.jsonValue(),
+            }
+        schema, evolved = _evolved_schema(
+            _table_schema(base), df.schema, merge_schema
+        )
+        # append CARRIES FORWARD the base's position delete vectors
+        # (E426): they bind to files that remain live; overwrite drops
+        # both the files and their deletes.
         manifest = {
-            "version": version,
             "mode": mode,
-            "segments": seg_entries + [new_entry],
+            "segments": base["segments"] + [new_entry],
             "schema": schema.jsonValue(),
+            **_carry(base, "delete_segments"),
         }
-        if evolved:
+        if evolved or base.get("merge_schema"):
             manifest["merge_schema"] = True
-        if carried_del_entries:
-            manifest["delete_segments"] = carried_del_entries
-        final = _manifest_path(table_dir, version)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            _auto_compact_manifests(spark, table_dir)
-            return version
-        continue  # a racer landed this version; recompute on top
-    raise RuntimeError(
-        f"concurrent commit: lost the race for versions up to {version} in "
-        f"{table_dir} {max_attempts} times; giving up"
+        return manifest
+
+    version = _commit_next(table_dir, make, max_attempts)
+    _auto_compact_manifests(spark, table_dir)
+    return version
+
+
+def _live_positions(spark: SparkSession, table_dir: str, man: dict, cols):
+    """``(file_path, row_index, *cols)`` of every LIVE row of snapshot
+    ``man``: a scan of its data files through Spark's ``_metadata``
+    struct, anti-joined with its delete vectors."""
+    from pyspark.sql import functions as F
+
+    reader = spark.read
+    if man.get("merge_schema"):
+        reader = reader.option("mergeSchema", "true")
+    live = reader.parquet(*_man_files(table_dir, man)).select(
+        F.col("_metadata.file_path").alias("file_path"),
+        F.col("_metadata.row_index").alias("row_index"),
+        *cols,
     )
+    existing = _man_delete_files(table_dir, man)
+    if existing:
+        live = live.join(
+            spark.read.parquet(*existing), ["file_path", "row_index"], "left_anti"
+        )
+    return live
+
+
+def _write_vector(table_dir: str, rows: DataFrame, name: str) -> dict:
+    """Write the position-delete ``rows`` under ``deletes/<name>`` and
+    return the delete segment's entry."""
+    import os
+
+    del_dir = os.path.join(table_dir, "deletes", name)
+    rows.select("file_path", "row_index").write.parquet(del_dir)
+    return _write_segment(table_dir, _parquet_files(del_dir), kind="delete")
 
 
 def commit_deletes(
@@ -1225,47 +1215,20 @@ def commit_deletes(
     pinned by the registry query. Compaction (E317) is where deletes
     eventually get physically applied.
     """
-    import os
     import uuid
 
-    prev = latest_version(table_dir)
-    if prev is None:
-        raise ValueError(f"no snapshots in {table_dir}")
-    from pyspark.sql import functions as F
-
-    man = _load_manifest(table_dir, prev)
-    files = _man_files(table_dir, man)
-    existing_dels = _man_delete_files(table_dir, man)
-    reader = spark.read
-    if man.get("merge_schema"):
-        reader = reader.option("mergeSchema", "true")
-    base = reader.parquet(*files).select(
-        F.col("_metadata.file_path").alias("file_path"),
-        F.col("_metadata.row_index").alias("row_index"),
-        "*",
-    )
-    if existing_dels:
-        dd = spark.read.parquet(*existing_dels)
-        base = base.join(dd, ["file_path", "row_index"], "left_anti")
-    new_dels = base.filter(predicate).select("file_path", "row_index")
-    del_dir = os.path.join(
-        table_dir, "deletes", f"d{prev + 1}.{uuid.uuid4().hex[:8]}"
-    )
-    new_dels.write.parquet(del_dir)
-    del_files = sorted(
-        os.path.join(del_dir, f)
-        for f in os.listdir(del_dir)
-        if f.endswith(".parquet")
-    )
+    prev, man = _latest_manifest(table_dir)
+    files = set(_man_files(table_dir, man))
     # one new DELETE segment ∝ this commit's sidecars; data segments are
     # re-referenced verbatim — a 0.1 % delete on a 10^6-file table now
     # writes a handful of KBs of metadata, not a million-path JSON.
-    new_del_entry = _write_segment(table_dir, del_files, kind="delete")
-    os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
-    for _ in range(max_attempts):
-        prev2 = latest_version(table_dir)
-        version = prev2 + 1
-        man2 = _load_manifest(table_dir, prev2)
+    new_del_entry = _write_vector(
+        table_dir,
+        _live_positions(spark, table_dir, man, ["*"]).filter(predicate),
+        f"d{prev + 1}.{uuid.uuid4().hex[:8]}",
+    )
+
+    def make(at, man2):
         # The delete vector was computed against the snapshot read at
         # ENTRY. A concurrent APPEND keeps those files live (the vector
         # stays valid; appended rows are untouched by position
@@ -1273,28 +1236,75 @@ def commit_deletes(
         # committing anyway would "succeed" while the vectors reference
         # files no longer in the manifest, i.e. the DELETE would
         # silently remove nothing. Conflict loudly instead.
-        if not set(files) <= set(_man_files(table_dir, man2)):
+        if not files <= set(_man_files(table_dir, man2)):
             raise RuntimeError(
                 f"write conflict in {table_dir}: files the delete vector "
-                f"was computed from are no longer live at v{prev2} (a "
+                f"was computed from are no longer live at v{at} (a "
                 "concurrent overwrite landed) — recompute the delete "
                 "against the current snapshot"
             )
-        manifest = {
-            "version": version,
+        return {
             "mode": "delete",
-            "segments": _man_data_segments(table_dir, man2),
-            "delete_segments": _man_delete_segments(table_dir, man2)
+            "segments": man2["segments"],
+            "delete_segments": man2.get("delete_segments", [])
             + [new_del_entry],
+            **_carry(man2, "schema", "merge_schema"),
         }
-        for k in ("schema", "merge_schema"):
-            if k in man2:
-                manifest[k] = man2[k]
-        final = _manifest_path(table_dir, version)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            return version
-        continue
-    raise RuntimeError(f"concurrent commit: delete lost races in {table_dir}")
+
+    return _commit_next(table_dir, make, max_attempts)
+
+
+def _commit_with_vector(
+    spark: SparkSession,
+    table_dir: str,
+    prev: int,
+    rows: DataFrame,
+    doomed,
+    cols,
+    mode: str,
+    prefix: str,
+    max_attempts: int,
+) -> int:
+    """The one append-plus-delete-vector writer (MERGE, CDC apply,
+    replaceWhere): append ``rows`` and position-delete
+    ``doomed(live)`` — ``live`` being :func:`_live_positions` over
+    ``cols`` — in ONE manifest link, so readers see all of it or none.
+    The appended files depend only on ``rows`` and are written once;
+    the vector depends on the snapshot, so every attempt recomputes it
+    against the latest (a racer's appends are matched too — no lost
+    update), and a losing attempt's vector is deleted."""
+    import os
+    import shutil
+    import uuid
+
+    data_dir = os.path.join(
+        table_dir, "data", f"{prefix}{prev + 1}.{uuid.uuid4().hex[:8]}"
+    )
+    rows.write.parquet(data_dir)
+    new_entry = _write_segment(table_dir, _parquet_files(data_dir))
+    attempt: dict = {}
+
+    def make(at, man):
+        attempt["dir"] = f"{prefix}{at + 1}.{uuid.uuid4().hex[:8]}"
+        del_entry = _write_vector(
+            table_dir,
+            doomed(_live_positions(spark, table_dir, man, cols)),
+            attempt["dir"],
+        )
+        return {
+            "mode": mode,
+            "segments": man["segments"] + [new_entry],
+            "delete_segments": man.get("delete_segments", []) + [del_entry],
+            **_carry(man, "schema", "merge_schema"),
+        }
+
+    def drop_vector():
+        shutil.rmtree(
+            os.path.join(table_dir, "deletes", attempt["dir"]),
+            ignore_errors=True,
+        )
+
+    return _commit_next(table_dir, make, max_attempts, on_lost=drop_vector)
 
 
 _PATH_CHUNK_DEFAULT = 100_000
@@ -1348,23 +1358,10 @@ def read_version(
     sidecar is ∝ deleted rows and broadcast-sized in any sane layout,
     so the read stays one scan + one broadcast anti-join."""
 
-    explicit = version is not None
     if version is None:
-        version = latest_version(table_dir)
-    if version is None:
-        raise ValueError(f"no snapshots in {table_dir}")
-    try:
-        man = _load_manifest(table_dir, version)
-    except FileNotFoundError:
-        if explicit:
-            raise  # caller asked for a version retention reclaimed
-        # Round-10 ADVICE (medium): latest-resolution race — a racer
-        # committed a newer version and a concurrent vacuum raised the
-        # retention cutoff past the version we just resolved. Re-resolve
-        # once; the new latest is at least as fresh as what we asked for.
-        version = latest_version(table_dir)
-        if version is None:
-            raise ValueError(f"no snapshots in {table_dir}") from None
+        version, man = _latest_manifest(table_dir)
+    else:
+        # a version retention reclaimed raises FileNotFoundError
         man = _load_manifest(table_dir, version)
     files = _man_files(table_dir, man)
     if not files:
@@ -1374,28 +1371,33 @@ def read_version(
     # files (the footer-merge job is per-FILE metadata work, not a
     # data scan). The path handoff is chunked past ~10⁵ files.
     df = _read_parquet_paths(spark, files, bool(man.get("merge_schema")))
-    del_files = _man_delete_files(table_dir, man)
-    if del_files:
-        from pyspark.sql import functions as F
+    return _minus_deletes(spark, df, _man_delete_files(table_dir, man))
 
-        dels = spark.read.parquet(*del_files)
-        cols = df.columns
-        df = (
-            df.select(
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-                "*",
-            )
-            .join(
-                F.broadcast(dels).withColumnsRenamed(
-                    {"file_path": "__fp", "row_index": "__ri"}
-                ),
-                ["__fp", "__ri"],
-                "left_anti",
-            )
-            .select(*cols)
+
+def _minus_deletes(spark: SparkSession, df: DataFrame, del_files) -> DataFrame:
+    """``df`` (a scan of snapshot data files) without the rows the
+    position delete vectors ``del_files`` name: one broadcast anti-join
+    on (file_path, row_index)."""
+    if not del_files:
+        return df
+    from pyspark.sql import functions as F
+
+    dels = spark.read.parquet(*del_files)
+    return (
+        df.select(
+            F.col("_metadata.file_path").alias("__fp"),
+            F.col("_metadata.row_index").alias("__ri"),
+            "*",
         )
-    return df
+        .join(
+            F.broadcast(dels).withColumnsRenamed(
+                {"file_path": "__fp", "row_index": "__ri"}
+            ),
+            ["__fp", "__ri"],
+            "left_anti",
+        )
+        .select(*df.columns)
+    )
 
 
 def _ref_pinned_versions(table_dir: str) -> set[int]:
@@ -1514,10 +1516,10 @@ def vacuum(
         # Grace alone cannot close the resolution→load race for an OLD
         # vN (reader resolves latest=N, racer commits N+1, vacuum raises
         # the cutoff and deletes vN.json before the reader loads it), so
-        # the other half of the fix lives at the clients: commit_version
-        # and read_version treat FileNotFoundError on a latest-resolved
-        # manifest as a LOST RACE and re-resolve, exactly like losing a
-        # put-if-absent. (A retained-margin manifest was considered and
+        # the other half of the fix lives at the clients: the one
+        # resolver, _latest_manifest, treats FileNotFoundError on a
+        # just-resolved manifest as a LOST RACE and re-resolves, exactly
+        # like losing a put-if-absent. (A retained-margin manifest was considered and
         # rejected: after an overwrite its data files are legitimately
         # reclaimed, leaving a manifest that lies about readable data.)
         cutoff = latest - keep_versions + 1
@@ -1543,9 +1545,7 @@ def vacuum(
         def _collect(tdir: str) -> None:
             for p in glob.glob(os.path.join(tdir, "manifests", "v*.json")):
                 man = json.load(open(p))
-                for e in man.get("segments", []) + man.get(
-                    "delete_segments", []
-                ):
+                for e in man["segments"] + man.get("delete_segments", []):
                     keep_segs.add(e["path"])
 
         _collect(table_dir)
@@ -1562,14 +1562,6 @@ def vacuum(
             with _CACHE_LOCK:
                 for p in removed:
                     _SEGMENT_CACHE.pop(p, None)
-                # drop memoized legacy wraps whose segment file was just
-                # reclaimed (it was unreferenced by any manifest)
-                for k in [
-                    k
-                    for k, entries in _LEGACY_WRAP_CACHE.items()
-                    if any(e["path"] in removed for e in entries)
-                ]:
-                    _LEGACY_WRAP_CACHE.pop(k, None)
     # Round-10 ADVICE (low): reclaim ``<dir>.__claim__`` marker objects
     # (the object-store backend's directory claims) whose claimed writer
     # directory holds NO parquet files — the debris of failed/raced
@@ -1830,8 +1822,8 @@ def read_version_delta(
     # rewrite_manifests commit in the range invalidates path identity
     # (same FILES repackaged under a new segment path), so anything
     # non-append falls back to the exact file-set difference.
-    a_seg_paths = {e["path"] for e in a.get("segments", [])}
-    if all_appends and "segments" in a and "segments" in b:
+    a_seg_paths = {e["path"] for e in a["segments"]}
+    if all_appends:
         new_files = sorted(
             f
             for e in b["segments"]
@@ -2408,29 +2400,20 @@ def clone_table(src_dir: str, dst_dir: str) -> int:
     import json
     import os
 
-    src_v = latest_version(src_dir)
-    if src_v is None:
-        raise ValueError(f"no snapshots in {src_dir}")
-    man = _load_manifest(src_dir, src_v)
-    os.makedirs(os.path.join(dst_dir, "manifests"), exist_ok=True)
+    src_v, man = _latest_manifest(src_dir)
     manifest = {
-        "version": 0,
         "mode": "clone",
         # zero-copy at BOTH levels: the clone's manifest list re-uses
         # the source's segment entries verbatim — O(segments) metadata,
         # no file list rewrite, no data bytes
-        "segments": _man_data_segments(src_dir, man),
+        "segments": man["segments"],
         "cloned_from": {"table": src_dir, "version": src_v},
+        **_carry(man, "delete_segments", "schema", "merge_schema"),
     }
-    del_segs = _man_delete_segments(src_dir, man)
-    if del_segs:
-        manifest["delete_segments"] = del_segs
-    for k in ("schema", "merge_schema"):
-        if man.get(k):
-            manifest[k] = man[k]
-    final = _manifest_path(dst_dir, 0)
-    if not _put_if_absent(final, {**manifest, "ts": _time.time()}):
-        raise RuntimeError(f"{dst_dir} already has a v0 manifest")
+    _commit_next(
+        dst_dir,
+        _planned_on(None, manifest, f"{dst_dir} already has a v0 manifest"),
+    )
     # EXT E468: register the clone with its source so source-side
     # vacuum keeps the shared files alive (last-writer-wins append is
     # fine here: clone creation is not a hot concurrent path, and a
@@ -2661,13 +2644,13 @@ def merge_into(
     the common CDC-batch case). Copy-on-write MERGE would rewrite every
     file containing a matched row.
 
-    Concurrency: optimistic, like ``commit_version``. The appended
-    files depend only on ``changes`` and are reused across retries; the
-    delete vector depends on the snapshot, so losing the manifest race
-    recomputes the vector against the new latest (a racer's appends
-    are matched too — no lost update) and retries. ANSI MERGE
-    cardinality is enforced: duplicate keys in ``changes`` are
-    rejected loudly (a multi-match would apply an arbitrary image).
+    Concurrency: the commit is :func:`_commit_with_vector`'s — the
+    appended files are written once, the vector (a key semi-join of the
+    live images against ``changes`` + ``delete_keys``) is recomputed
+    against the latest snapshot on every attempt, and a lost attempt's
+    vector is deleted. ANSI MERGE cardinality is enforced: duplicate
+    keys in ``changes`` are rejected loudly (a multi-match would apply
+    an arbitrary image).
 
     The schema of ``changes`` must match the table exactly (evolution
     belongs to ``commit_version(merge_schema=True)``, not to upserts).
@@ -2679,22 +2662,13 @@ def merge_into(
     Keys in BOTH relations are rejected (ambiguous clause order);
     everything still lands in the ONE atomic manifest link.
     """
-    import os
-    import shutil
-    import uuid
-
     from pyspark.sql import functions as F
 
     if isinstance(key_cols, str):
         key_cols = [key_cols]
-    prev = latest_version(table_dir)
-    if prev is None:
-        raise ValueError(f"no snapshots in {table_dir}")
-    man0 = _load_manifest(table_dir, prev)
+    prev, man0 = _latest_manifest(table_dir)
     # strict schema parity (names+types, order-insensitive)
-    _evolved_schema(
-        _table_schema(spark, man0, table_dir), changes.schema, False
-    )
+    _evolved_schema(_table_schema(man0), changes.schema, False)
     _enforce_constraints(spark, table_dir, changes)
     dup = (
         changes.groupBy(*key_cols)
@@ -2721,69 +2695,14 @@ def merge_into(
                 "MERGE key appears in both the upsert and the DELETE "
                 "branch — ambiguous clause order"
             )
-    # append side: written ONCE, valid across retries
-    data_dir = os.path.join(
-        table_dir, "data", f"m{prev + 1}.{uuid.uuid4().hex[:8]}"
-    )
-    changes.write.parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    new_entry = _write_segment(table_dir, new_files)
-    os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
     keys = changes.select(*key_cols)
     if delete_keys is not None:
         keys = keys.unionByName(delete_keys)
-    for _ in range(max_attempts):
-        at = latest_version(table_dir)
-        man = _load_manifest(table_dir, at)
-        files = _man_files(table_dir, man)
-        existing_dels = _man_delete_files(table_dir, man)
-        reader = spark.read
-        if man.get("merge_schema"):
-            reader = reader.option("mergeSchema", "true")
-        base = reader.parquet(*files).select(
-            F.col("_metadata.file_path").alias("file_path"),
-            F.col("_metadata.row_index").alias("row_index"),
-            *key_cols,
-        )
-        if existing_dels:
-            dd = spark.read.parquet(*existing_dels)
-            base = base.join(dd, ["file_path", "row_index"], "left_anti")
-        matched = base.join(keys, key_cols, "left_semi").select(
-            "file_path", "row_index"
-        )
-        del_dir = os.path.join(
-            table_dir, "deletes", f"m{at + 1}.{uuid.uuid4().hex[:8]}"
-        )
-        matched.write.parquet(del_dir)
-        del_files = sorted(
-            os.path.join(del_dir, f)
-            for f in os.listdir(del_dir)
-            if f.endswith(".parquet")
-        )
-        del_entry = _write_segment(table_dir, del_files, kind="delete")
-        manifest = {
-            "version": at + 1,
-            "mode": "merge",
-            "segments": _man_data_segments(table_dir, man) + [new_entry],
-            "delete_segments": _man_delete_segments(table_dir, man)
-            + [del_entry],
-        }
-        for k in ("schema", "merge_schema"):
-            if k in man:
-                manifest[k] = man[k]
-        final = _manifest_path(table_dir, at + 1)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            return at + 1
-        # a racer landed this version: the vector is stale (it may
-        # miss rows the racer appended) — drop it and recompute
-        # against the new latest. The append side stays valid.
-        shutil.rmtree(del_dir, ignore_errors=True)
-        continue
-    raise RuntimeError(f"concurrent commit: MERGE lost races in {table_dir}")
+    return _commit_with_vector(
+        spark, table_dir, prev, changes,
+        lambda live: live.join(keys, key_cols, "left_semi"),
+        key_cols, "merge", "m", max_attempts,
+    )
 
 
 def optimize_table(
@@ -2821,10 +2740,7 @@ def optimize_table(
 
     from pyspark.sql import functions as F
 
-    prev = latest_version(table_dir)
-    if prev is None:
-        raise ValueError(f"no snapshots in {table_dir}")
-    man = _load_manifest(table_dir, prev)
+    prev, man = _latest_manifest(table_dir)
     live = _man_files(table_dir, man)
     df = read_version(spark, table_dir, prev)  # deletes applied
     live_bytes = sum(os.path.getsize(f) for f in live)
@@ -2846,29 +2762,25 @@ def optimize_table(
     else:
         part = df.repartition(n_target)
     part.write.parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
     manifest = {
-        "version": prev + 1,
         "mode": "optimize",
         # OPTIMIZE also compacts the METADATA: the rewrite is one fresh
         # segment, resetting manifest-list growth accumulated by appends
-        "segments": [_write_segment(table_dir, new_files)],
+        "segments": [_write_segment(table_dir, _parquet_files(data_dir))],
         # rewritten files all share the current (possibly evolved)
         # schema: the merge_schema flag is intentionally DROPPED —
         # OPTIMIZE normalizes layout and schema alike.
         "schema": df.schema.jsonValue(),
     }
-    final = _manifest_path(table_dir, prev + 1)
-    if not _put_if_absent(final, {**manifest, "ts": _time.time()}):
-        raise RuntimeError(
+    return _commit_next(
+        table_dir,
+        _planned_on(
+            prev,
+            manifest,
             f"concurrent commit during OPTIMIZE of {table_dir} — the "
-            "rewrite was computed against a stale snapshot; re-run"
-        )
-    return prev + 1
+            "rewrite was computed against a stale snapshot; re-run",
+        ),
+    )
 
 
 def _merge_lifecycle_root(spark: SparkSession, sf_dir: str) -> str:
@@ -3072,88 +2984,29 @@ def apply_cdc_feed(
     yields exactly the v_to state — cross-region sync, a reporting
     replica, or an E403-style incremental view all ride this.
 
-    Mechanics mirror :func:`merge_into` (position-delete + append, one
-    manifest link) but keyed off the feed's ``_change_type`` column
-    instead of key matching: the upstream already decided WHAT
-    changed, so no cardinality guard and no change-key semi-join
-    against the replica's full key set — the delete vector is built by
-    one semi-join of the replica's live images against the feed's
-    delete keys. Cost ∝ |feed| + one keyed probe of the replica.
+    Mechanics are :func:`merge_into`'s (the one append-plus-vector
+    writer, :func:`_commit_with_vector`) but keyed off the feed's
+    ``_change_type`` column instead of key matching: the upstream
+    already decided WHAT changed, so no cardinality guard and no
+    change-key semi-join against the replica's full key set — the
+    delete vector is built by one semi-join of the replica's live
+    images against the feed's delete keys. Cost ∝ |feed| + one keyed
+    probe of the replica.
     """
-    import os
-    import shutil
-    import uuid
-
     from pyspark.sql import functions as F
 
     if isinstance(key_cols, str):
         key_cols = [key_cols]
-    prev = latest_version(table_dir)
-    if prev is None:
-        raise ValueError(f"no snapshots in {table_dir}")
+    prev, man0 = _latest_manifest(table_dir)
     inserts = feed.filter(F.col("_change_type") == "insert").drop("_change_type")
     del_keys = feed.filter(F.col("_change_type") == "delete").select(*key_cols)
-    man0 = _load_manifest(table_dir, prev)
-    _evolved_schema(
-        _table_schema(spark, man0, table_dir), inserts.schema, False
-    )
+    _evolved_schema(_table_schema(man0), inserts.schema, False)
     _enforce_constraints(spark, table_dir, inserts)
-    data_dir = os.path.join(
-        table_dir, "data", f"cdc{prev + 1}.{uuid.uuid4().hex[:8]}"
+    return _commit_with_vector(
+        spark, table_dir, prev, inserts,
+        lambda live: live.join(del_keys, key_cols, "left_semi"),
+        key_cols, "cdc_apply", "cdc", max_attempts,
     )
-    inserts.write.parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    new_entry = _write_segment(table_dir, new_files)
-    os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
-    for _ in range(max_attempts):
-        at = latest_version(table_dir)
-        man = _load_manifest(table_dir, at)
-        files = _man_files(table_dir, man)
-        existing_dels = _man_delete_files(table_dir, man)
-        reader = spark.read
-        if man.get("merge_schema"):
-            reader = reader.option("mergeSchema", "true")
-        base = reader.parquet(*files).select(
-            F.col("_metadata.file_path").alias("file_path"),
-            F.col("_metadata.row_index").alias("row_index"),
-            *key_cols,
-        )
-        if existing_dels:
-            dd = spark.read.parquet(*existing_dels)
-            base = base.join(dd, ["file_path", "row_index"], "left_anti")
-        doomed = base.join(del_keys, key_cols, "left_semi").select(
-            "file_path", "row_index"
-        )
-        del_dir = os.path.join(
-            table_dir, "deletes", f"cdc{at + 1}.{uuid.uuid4().hex[:8]}"
-        )
-        doomed.write.parquet(del_dir)
-        del_files = sorted(
-            os.path.join(del_dir, f)
-            for f in os.listdir(del_dir)
-            if f.endswith(".parquet")
-        )
-        del_entry = _write_segment(table_dir, del_files, kind="delete")
-        manifest = {
-            "version": at + 1,
-            "mode": "cdc_apply",
-            "segments": _man_data_segments(table_dir, man) + [new_entry],
-            "delete_segments": _man_delete_segments(table_dir, man)
-            + [del_entry],
-        }
-        for k in ("schema", "merge_schema"):
-            if k in man:
-                manifest[k] = man[k]
-        final = _manifest_path(table_dir, at + 1)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            return at + 1
-        shutil.rmtree(del_dir, ignore_errors=True)
-        continue
-    raise RuntimeError(f"concurrent commit: CDC apply lost races in {table_dir}")
 
 
 def cdc_replication_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3178,18 +3031,17 @@ def cdc_replication_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         replica = os.path.join(stage, "replica")
         src = os.path.join(src_root, "tbl")
         # fork the replica at v0: a manifest referencing the source's
-        # v0 files verbatim (clone_table clones LATEST, so write the
+        # v0 files verbatim (clone_table clones LATEST, so publish the
         # v0-pinned manifest directly — zero-copy like E447)
-        import json as _json
-
-        man0 = _json.load(open(_manifest_path(src, 0)))
-        os.makedirs(os.path.join(replica, "manifests"), exist_ok=True)
-        man = dict(man0)
-        man["mode"] = "clone"
-        man["cloned_from"] = {"table": src, "version": 0}
-        final = _manifest_path(replica, 0)
-        if not _put_if_absent(final, {**man, "ts": _time.time()}):
-            raise RuntimeError(f"{replica} already has a v0 manifest")
+        fork = {
+            **_load_manifest(src, 0),
+            "mode": "clone",
+            "cloned_from": {"table": src, "version": 0},
+        }
+        _commit_next(
+            replica,
+            _planned_on(None, fork, f"{replica} already has a v0 manifest"),
+        )
         feed = snapshot_cdc_feed(spark, src, 0, 2)
         apply_cdc_feed(spark, replica, feed, "event_id")
 
@@ -3218,13 +3070,14 @@ def snapshot_file_stats(
     these bounds in their manifests — and since round 8 so does this
     store: segment manifests embed per-file min/max at write time, so
     the common path reads NO footers; the footer pass remains the
-    fallback for legacy manifests and columns without recorded stats,
-    keeping historical snapshots stat-able without rewriting them."""
+    fallback for files whose footers carry no usable bounds for
+    ``col`` (e.g. non-JSON-round-trippable types)."""
     import pyarrow.parquet as pq
 
     if version is None:
-        version = latest_version(table_dir)
-    man = _load_manifest(table_dir, version)
+        version, man = _latest_manifest(table_dir)
+    else:
+        man = _load_manifest(table_dir, version)
     recorded = _man_file_stats(table_dir, man, col)
     out: dict[str, tuple] = {}
     for f in _man_files(table_dir, man):
@@ -3273,47 +3126,24 @@ def pruned_snapshot_read(
     from pyspark.sql import functions as F
 
     if version is None:
-        version = latest_version(table_dir)
-    man = _load_manifest(table_dir, version)
+        version, man = _latest_manifest(table_dir)
+    else:
+        man = _load_manifest(table_dir, version)
     # files_total comes from the manifest-list n_files rollups —
     # O(list length), no segment JSON opened, no 10⁶-path
     # materialization just to report a denominator (round 11)
     n_total = _man_n_files(table_dir, man)
-    if "segments" in man:
-        keep = _pruned_files(man, col, lo, hi)
-    else:
-        stats = snapshot_file_stats(table_dir, col, version)
-        keep = [
-            f
-            for f in _man_files(table_dir, man)
-            if stats[f][0] is None
-            or not (stats[f][1] < lo or stats[f][0] > hi)
-        ]
+    keep = _pruned_files(man, col, lo, hi)
     if not keep:
         raise ValueError(f"no file overlaps [{lo}, {hi}] on {col}")
     df = _read_parquet_paths(
         spark, keep, bool(man.get("merge_schema"))
     ).filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
-    del_files = _man_delete_files(table_dir, man)
-    if del_files:
-        dels = spark.read.parquet(*del_files)
-        cols = [c for c in df.columns]
-        df = (
-            df.select(
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-                "*",
-            )
-            .join(
-                F.broadcast(dels).withColumnsRenamed(
-                    {"file_path": "__fp", "row_index": "__ri"}
-                ),
-                ["__fp", "__ri"],
-                "left_anti",
-            )
-            .select(*cols)
-        )
-    return df, len(keep), n_total
+    return (
+        _minus_deletes(spark, df, _man_delete_files(table_dir, man)),
+        len(keep),
+        n_total,
+    )
 
 
 def _pruned_files(man: dict, col: str, lo, hi) -> list[str]:
@@ -3430,30 +3260,24 @@ def restore_table(
     whether rolling back over THEIR commit is still intended.
     """
 
-    cur = latest_version(table_dir)
-    if cur is None:
-        raise ValueError(f"no snapshots in {table_dir}")
+    cur, _ = _latest_manifest(table_dir)
     man = _load_manifest(table_dir, to_version)
     manifest = {
-        "version": cur + 1,
         "mode": "restore",
         # zero-copy at both levels: segment entries re-referenced verbatim
-        "segments": _man_data_segments(table_dir, man),
+        "segments": man["segments"],
         "restored_from": to_version,
+        **_carry(man, "delete_segments", "schema", "merge_schema"),
     }
-    del_segs = _man_delete_segments(table_dir, man)
-    if del_segs:
-        manifest["delete_segments"] = del_segs
-    for k in ("schema", "merge_schema"):
-        if man.get(k):
-            manifest[k] = man[k]
-    final = _manifest_path(table_dir, cur + 1)
-    if not _put_if_absent(final, {**manifest, "ts": _time.time()}):
-        raise RuntimeError(
+    return _commit_next(
+        table_dir,
+        _planned_on(
+            cur,
+            manifest,
             f"concurrent commit during RESTORE of {table_dir} — re-examine "
-            "before rolling back over the racer's commit"
-        )
-    return cur + 1
+            "before rolling back over the racer's commit",
+        ),
+    )
 
 
 def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -3705,12 +3529,7 @@ def optimize_batches(
 
     import pyarrow.parquet as pq
 
-    from pyspark.sql import functions as F
-
-    prev = latest_version(table_dir)
-    if prev is None:
-        raise ValueError(f"no snapshots in {table_dir}")
-    man = _load_manifest(table_dir, prev)
+    prev, man = _latest_manifest(table_dir)
     dels0 = _man_delete_files(table_dir, man)
     recorded_rows = _man_file_rows(table_dir, man)
     # greedy row-budget binning in file order (the E317 rule); row
@@ -3734,38 +3553,14 @@ def optimize_batches(
     reader = spark.read
     if man.get("merge_schema"):
         reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*subset)
-    if dels0:
-        dd = spark.read.parquet(*dels0)
-        cols = df.columns
-        df = (
-            df.select(
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-                "*",
-            )
-            .join(
-                F.broadcast(dd).withColumnsRenamed(
-                    {"file_path": "__fp", "row_index": "__ri"}
-                ),
-                ["__fp", "__ri"],
-                "left_anti",
-            )
-            .select(*cols)
-        )
+    df = _minus_deletes(spark, reader.parquet(*subset), dels0)
     data_dir = os.path.join(
         table_dir, "data", f"optb{prev + 1}.{uuid.uuid4().hex[:8]}"
     )
     df.repartition(1).write.parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    new_entry = _write_segment(table_dir, new_files)
-    for _ in range(5):
-        at = latest_version(table_dir)
-        man2 = _load_manifest(table_dir, at)
+    new_entry = _write_segment(table_dir, _parquet_files(data_dir))
+
+    def make(at, man2):
         if not set(subset) <= set(_man_files(table_dir, man2)) or (
             _man_delete_files(table_dir, man2) != dels0
         ):
@@ -3775,26 +3570,18 @@ def optimize_batches(
                 "re-plan against the current snapshot"
             )
         # untouched segments carried by reference; only segments the
-        # batch intersects are rewritten — commit bytes ∝ files touched
-        manifest = {
-            "version": at + 1,
+        # batch intersects are rewritten — commit bytes ∝ files touched.
+        # A racer's append is rebased onto.
+        return {
             "mode": "optimize",
             "segments": _segments_without(
-                table_dir, _man_data_segments(table_dir, man2), set(subset)
+                table_dir, man2["segments"], set(subset)
             )
             + [new_entry],
+            **_carry(man2, "delete_segments", "schema", "merge_schema"),
         }
-        del_segs = _man_delete_segments(table_dir, man2)
-        if del_segs:
-            manifest["delete_segments"] = del_segs
-        for k in ("schema", "merge_schema"):
-            if man2.get(k):
-                manifest[k] = man2[k]
-        final = _manifest_path(table_dir, at + 1)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            return at + 1
-        continue  # racer appended: rebase the untouched-file list
-    raise RuntimeError(f"incremental OPTIMIZE lost races in {table_dir}")
+
+    return _commit_next(table_dir, make)
 
 
 def incremental_optimize_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3916,8 +3703,7 @@ def commit_partitioned(
             "before committing"
         )
     prev = latest_version(table_dir)
-    guess = 0 if prev is None else prev + 1
-    data_dir = _claim_data_dir(table_dir, f"v{guess}")
+    data_dir = _claim_data_dir(table_dir, f"v{0 if prev is None else prev + 1}")
     # append, not overwrite — same claim-preservation rule as
     # commit_version: overwrite's delete phase would drop the mkdir
     # claim and open the bare name to a concurrent claimant
@@ -3944,35 +3730,28 @@ def commit_partitioned(
     # segments keep their own tuples, so partition evolution stays
     # zero-rewrite at the metadata level too
     new_entry = _write_segment(table_dir, new_files, partitions=partitions)
-    os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
-    version = guess
-    for _ in range(max_attempts):
-        prev = latest_version(table_dir)
-        version = 0 if prev is None else prev + 1
-        seg_entries: list[dict] = []
+
+    def make(prev, man):
+        segs: list[dict] = []
+        # current spec first, then every spec any live file was
+        # written under (the pruning-key universe)
         spec_union = list(names)
-        if mode == "append" and prev is not None:
-            prev_man = _load_manifest(table_dir, prev)
-            seg_entries = list(_man_data_segments(table_dir, prev_man))
-            for t in prev_man.get("transforms", []):
+        if mode == "append" and man is not None:
+            segs = man["segments"]
+            for t in man.get("transforms", []):
                 if t not in spec_union:
                     spec_union.append(t)
-        manifest = {
-            "version": version,
+        return {
             "mode": mode,
-            "segments": seg_entries + [new_entry],
+            "segments": segs + [new_entry],
             # logical schema = the SOURCE schema; transforms are derived
             "schema": df.schema.jsonValue(),
-            # current spec first, then every spec any live file was
-            # written under (the pruning-key universe)
             "transforms": spec_union,
         }
-        final = _manifest_path(table_dir, version)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            _auto_compact_manifests(spark, table_dir)
-            return version
-        continue
-    raise RuntimeError(f"concurrent commit lost {max_attempts} races in {table_dir}")
+
+    version = _commit_next(table_dir, make, max_attempts)
+    _auto_compact_manifests(spark, table_dir)
+    return version
 
 
 def _auto_compact_manifests(spark: SparkSession, table_dir: str) -> None:
@@ -4026,89 +3805,29 @@ def rewrite_segments(
     (rebasing is always safe — the new latest's segments are merged
     instead). Returns the committed version, or the current latest
     unchanged if the list is already within budget."""
-    import json
-    import os
-    import uuid
 
-    for _ in range(max_attempts):
-        prev = latest_version(table_dir)
-        if prev is None:
+    def make(prev, man):
+        if man is None:
             raise ValueError(f"no snapshots in {table_dir}")
-        man = _load_manifest(table_dir, prev)
-        entries = _man_data_segments(table_dir, man)
+        entries = man["segments"]
         if len(entries) <= max_entries:
-            return prev
-        files: list[str] = []
-        rows: dict[str, int] = {}
-        stats: dict[str, dict] = {}
-        parts: dict[str, dict] = {}
+            return None
+        merged: dict = {"files": []}
         for e in entries:
             seg = _seg_load(e)
-            files.extend(seg["files"])
-            rows.update(seg.get("n_rows", {}))
-            stats.update(seg.get("stats", {}))
-            parts.update(seg.get("partitions", {}))
-        merged_seg: dict = {"files": files}
-        if rows:
-            merged_seg["n_rows"] = rows
-        if stats:
-            merged_seg["stats"] = stats
-        if parts:
-            merged_seg["partitions"] = parts
-        seg_dir = os.path.join(table_dir, "segments")
-        os.makedirs(seg_dir, exist_ok=True)
-        spath = os.path.join(seg_dir, f"s-{uuid.uuid4().hex[:16]}.json")
-        with open(spath, "w") as f:
-            json.dump(merged_seg, f)
-        _seg_cache_put(spath, merged_seg)
-        entry: dict = {"path": spath, "kind": "data", "n_files": len(files)}
-        if rows and len(rows) == len(files):
-            entry["n_rows"] = sum(rows.values())
-        roll: dict = {}
-        cover: dict[str, int] = {}
-        for b in stats.values():
-            for col, (lo, hi) in b.items():
-                cover[col] = cover.get(col, 0) + 1
-                cur = roll.get(col)
-                roll[col] = (
-                    [lo, hi] if cur is None
-                    else [min(cur[0], lo), max(cur[1], hi)]
-                )
-        # per-column coverage guard (same soundness rule as
-        # _write_segment): only columns EVERY file has bounds for
-        roll = {c: b for c, b in roll.items() if cover.get(c) == len(files)}
-        if roll:
-            entry["stats"] = roll
-        if parts:
-            common = None
-            for tup in parts.values():
-                keys = set(tup)
-                common = keys if common is None else common & keys
-            pstats = {
-                name: [
-                    min(t[name] for t in parts.values()),
-                    max(t[name] for t in parts.values()),
-                ]
-                for name in sorted(common or ())
-            }
-            if pstats and len(parts) == len(files):
-                entry["pstats"] = pstats
-        manifest = {
-            "version": prev + 1,
+            merged["files"].extend(seg["files"])
+            for k in ("n_rows", "stats", "partitions"):
+                if seg.get(k):
+                    merged.setdefault(k, {}).update(seg[k])
+        return {
             "mode": "rewrite_manifests",
-            "segments": [entry],
+            "segments": [_segment_entry(table_dir, merged)],
+            **_carry(
+                man, "delete_segments", "schema", "merge_schema", "transforms"
+            ),
         }
-        del_segs = _man_delete_segments(table_dir, man)
-        if del_segs:
-            manifest["delete_segments"] = del_segs
-        for k in ("schema", "merge_schema", "transforms"):
-            if man.get(k):
-                manifest[k] = man[k]
-        final = _manifest_path(table_dir, prev + 1)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            return prev + 1
-        continue  # racer committed: re-read and merge the new latest
-    raise RuntimeError(f"rewrite_segments lost races in {table_dir}")
+
+    return _commit_next(table_dir, make, max_attempts)
 
 
 def read_hidden_partitioned(
@@ -4142,8 +3861,7 @@ def read_hidden_partitioned(
                 return False
         return True
 
-    prev = latest_version(table_dir)
-    man = _load_manifest(table_dir, prev)
+    _, man = _latest_manifest(table_dir)
     known = set(man.get("transforms", []))
     for name in (pred or {}):
         if name not in known:
@@ -4151,32 +3869,26 @@ def read_hidden_partitioned(
                 f"predicate transform {name!r} not in table spec {known}"
             )
     keep: list[str] = []
-    if "segments" in man:
-        n_total = sum(e["n_files"] for e in man["segments"])
-        for e in man["segments"]:
-            ps = e.get("pstats", {})
-            skip = False
-            for name, cond in (pred or {}).items():
-                if name not in ps:
-                    continue
-                lo, hi = ps[name]
-                if isinstance(cond, (tuple, list)):
-                    if hi < cond[0] or lo > cond[1]:
-                        skip = True
-                        break
-                elif cond < lo or cond > hi:
+    n_total = sum(e["n_files"] for e in man["segments"])
+    for e in man["segments"]:
+        ps = e.get("pstats", {})
+        skip = False
+        for name, cond in (pred or {}).items():
+            if name not in ps:
+                continue
+            lo, hi = ps[name]
+            if isinstance(cond, (tuple, list)):
+                if hi < cond[0] or lo > cond[1]:
                     skip = True
                     break
-            if skip:
-                continue
-            seg = _seg_load(e)
-            sparts = seg.get("partitions", {})
-            keep.extend(f for f in seg["files"] if _tuple_ok(sparts.get(f, {})))
-    else:
-        files = _man_files(table_dir, man)
-        parts = _man_partitions(table_dir, man)
-        n_total = len(files)
-        keep = [f for f in files if _tuple_ok(parts[f])]
+            elif cond < lo or cond > hi:
+                skip = True
+                break
+        if skip:
+            continue
+        seg = _seg_load(e)
+        sparts = seg.get("partitions", {})
+        keep.extend(f for f in seg["files"] if _tuple_ok(sparts.get(f, {})))
     schema = StructType.fromJson(man["schema"])
     if not keep:
         df = spark.createDataFrame([], schema)
@@ -4832,81 +4544,24 @@ def replace_where(
     constraint — silent scope escape corrupts the next reprocess).
 
     Mechanics: position-delete vector over current matching images +
-    append, one manifest link (mode ``replace_where``); data files are
-    never rewritten, cost ∝ matches + |df|. Optimistic retries like
-    MERGE: the vector recomputes against the new latest on a lost race.
+    append, one manifest link (mode ``replace_where``) through
+    :func:`_commit_with_vector`, MERGE's writer; data files are never
+    rewritten, cost ∝ matches + |df|. The vector recomputes against the
+    new latest on a lost race.
     """
-    import os
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    prev = latest_version(table_dir)
-    if prev is None:
-        raise ValueError(f"no snapshots in {table_dir}")
-    man0 = _load_manifest(table_dir, prev)
-    _evolved_schema(_table_schema(spark, man0, table_dir), df.schema, False)
+    prev, man0 = _latest_manifest(table_dir)
+    _evolved_schema(_table_schema(man0), df.schema, False)
     _enforce_constraints(spark, table_dir, df)
     n_outside = df.filter(f"NOT ({predicate})").limit(1).count()
     if n_outside:
         raise ValueError(
             f"replaceWhere: incoming rows violate the scope {predicate!r}"
         )
-    data_dir = os.path.join(
-        table_dir, "data", f"rw{prev + 1}.{uuid.uuid4().hex[:8]}"
+    return _commit_with_vector(
+        spark, table_dir, prev, df,
+        lambda live: live.filter(predicate),
+        ["*"], "replace_where", "rw", max_attempts,
     )
-    df.write.parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    new_entry = _write_segment(table_dir, new_files)
-    os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
-    for _ in range(max_attempts):
-        at = latest_version(table_dir)
-        man = _load_manifest(table_dir, at)
-        files = _man_files(table_dir, man)
-        existing_dels = _man_delete_files(table_dir, man)
-        reader = spark.read
-        if man.get("merge_schema"):
-            reader = reader.option("mergeSchema", "true")
-        base = reader.parquet(*files).select(
-            F.col("_metadata.file_path").alias("file_path"),
-            F.col("_metadata.row_index").alias("row_index"),
-            "*",
-        )
-        if existing_dels:
-            dd = spark.read.parquet(*existing_dels)
-            base = base.join(dd, ["file_path", "row_index"], "left_anti")
-        matched = base.filter(predicate).select("file_path", "row_index")
-        del_dir = os.path.join(
-            table_dir, "deletes", f"rw{at + 1}.{uuid.uuid4().hex[:8]}"
-        )
-        matched.write.parquet(del_dir)
-        del_files = sorted(
-            os.path.join(del_dir, f)
-            for f in os.listdir(del_dir)
-            if f.endswith(".parquet")
-        )
-        del_entry = _write_segment(table_dir, del_files, kind="delete")
-        manifest = {
-            "version": at + 1,
-            "mode": "replace_where",
-            "segments": _man_data_segments(table_dir, man) + [new_entry],
-            "delete_segments": _man_delete_segments(table_dir, man)
-            + [del_entry],
-        }
-        for k in ("schema", "merge_schema"):
-            if k in man:
-                manifest[k] = man[k]
-        final = _manifest_path(table_dir, at + 1)
-        if _put_if_absent(final, {**manifest, "ts": _time.time()}):
-            return at + 1
-        shutil.rmtree(del_dir, ignore_errors=True)
-        continue
-    raise RuntimeError(f"replaceWhere lost races in {table_dir}")
 
 
 def _replace_where_root(spark: SparkSession, sf_dir: str) -> str:

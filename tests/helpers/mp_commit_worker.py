@@ -1,7 +1,7 @@
 """Round-9 multi-process commit-stress worker (verdict item 6).
 
 Runs as a SEPARATE Python process with its own JVM, its own
-``_SEGMENT_CACHE`` / legacy-wrap memo state, and its own SparkSession —
+``_SEGMENT_CACHE`` state, and its own SparkSession —
 the cross-PROCESS complement to the round-8 true-thread races, which
 all shared one driver. ``os.link``/``mkdir`` atomicity holds across
 processes, but the claim→write→publish sequencing had only ever been

@@ -182,11 +182,7 @@ def test_commit_version_retry_lands_both_writers(spark, sf_dir, tmp_path, monkey
         # view; the winner's v1 appears only on the retry re-read
         stale_reads["n"] += 1
         if stale_reads["n"] == 1:
-            winner = {
-                "version": 1,
-                "mode": "append",
-                "files": layout.json_manifest_files(t, 0),
-            }
+            winner = {**layout._load_manifest(t, 0), "version": 1}
             with open(os.path.join(t, "manifests", "v1.json"), "w") as f:
                 json.dump(winner, f)
             return 0

@@ -164,6 +164,53 @@ def test_q16_anti_join_and_partial_distinct(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2
 
 
+def test_q21_counts_lineitems_at_supplier_max(spark, tmp_path):
+    """Two lineitems of one (order, supplier) on its max ship date are
+    two waiting lineitems, as in the oracle's EXISTS/NOT EXISTS form —
+    not one (order, supplier) pair."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_to_csv_spark.operators import tpch_ext
+    from parquet_to_csv_spark.plans.registry import ORACLES
+
+    d1, d2 = dt.datetime(1995, 1, 1), dt.datetime(1995, 2, 1)
+    # (orderkey, suppkey, shipdate): order 1 — S10 ships last twice;
+    # order 2 — S20 ships last once; order 3 has one supplier only
+    lines = [(1, 10, d2), (1, 10, d2), (1, 20, d1),
+             (2, 20, d2), (2, 10, d1), (3, 10, d2)]
+    pq.write_table(
+        pa.table({
+            "l_orderkey": pa.array([r[0] for r in lines], pa.int64()),
+            "l_suppkey": pa.array([r[1] for r in lines], pa.int64()),
+            "l_shipdate": pa.array([r[2] for r in lines], pa.timestamp("us")),
+        }),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    pq.write_table(
+        pa.table({
+            "s_suppkey": pa.array([10, 20], pa.int64()),
+            "s_name": ["S10", "S20"],
+        }),
+        str(tmp_path / "supplier.parquet"),
+    )
+    con = duckdb.connect()
+    for t in ("lineitem", "supplier"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    expect = con.execute(ORACLES["q21_waiting_supplier"]).fetchall()
+    assert expect == [("S10", 2), ("S20", 1)]
+    got = [
+        (r["s_name"], r["numwait"])
+        for r in tpch_ext.q21_waiting_supplier(spark, str(tmp_path)).collect()
+    ]
+    assert got == expect
+
+
 def test_column_profile_single_scan(spark, sf_dir):
     df = relational.column_profile(spark, sf_dir)
     plan = _physical(df)

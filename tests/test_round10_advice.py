@@ -1,9 +1,9 @@
 """Round-10 ADVICE closures (see ADVICE.md, round 9 -> 10):
 
 1. (medium) vacuum's version-retention manifest deletion honors the
-   mtime grace window, and BOTH clients of latest_version() treat a
-   vanished just-resolved manifest as a lost race: commit_version
-   retries on top of the new latest, read_version re-resolves once.
+   mtime grace window, and the one latest-manifest resolver treats a
+   vanished just-resolved manifest as a lost race: every writer
+   commits on top of the new latest, read_version re-resolves.
 2. (low) _auto_compact_manifests swallows EVERY exception — the append
    already committed, so no fold failure may induce a duplicate retry.
 3. (low) ConditionalPutCommitBackend.put_if_absent is atomic ACROSS
@@ -50,11 +50,24 @@ def test_vacuum_manifest_mtime_grace(spark, tmp_path):
 # --- 1b: commit_version treats a vacuumed append base as a lost race --------
 
 
-def test_commit_append_survives_vacuumed_base(spark, tmp_path, monkeypatch):
+def _merge_rows(spark, t, df):
+    return L.merge_into(spark, t, df, "k")
+
+
+def _replace_rows(spark, t, df):
+    return L.replace_where(spark, t, "k >= 100", df)
+
+
+@pytest.mark.parametrize(
+    "writer", [L.commit_version, _merge_rows, _replace_rows],
+    ids=["commit_version", "merge_into", "replace_where"],
+)
+def test_commit_append_survives_vacuumed_base(spark, tmp_path, monkeypatch, writer):
     """The exact ADVICE interleaving: a writer resolves latest -> 0,
     a racer's commit + vacuum(keep_versions=1, grace=0) delete v0.json,
     and the writer's _load_manifest(0) hits FileNotFoundError. That must
-    be a retry (re-resolve latest, append on top), not a crash."""
+    be a retry (re-resolve latest, append on top), not a crash — for
+    every writer that builds on the latest snapshot."""
     t = str(tmp_path / "tbl")
     L.commit_version(spark, t, _df(spark, 0, 5))  # v0
     L.commit_version(spark, t, _df(spark, 5, 8))  # v1 appends (carries v0)
@@ -66,13 +79,12 @@ def test_commit_append_survives_vacuumed_base(spark, tmp_path, monkeypatch):
 
     def stale_then_real(table_dir):
         calls["n"] += 1
-        # first resolution (pre-write schema validation) AND the first
-        # retry-loop iteration both see the STALE latest whose manifest
-        # a concurrent vacuum already deleted
+        # the first two resolutions see the STALE latest whose
+        # manifest a concurrent vacuum already deleted
         return 0 if calls["n"] <= 2 else real(table_dir)
 
     monkeypatch.setattr(L, "latest_version", stale_then_real)
-    v = L.commit_version(spark, t, _df(spark, 100, 103))
+    v = writer(spark, t, _df(spark, 100, 103))
     monkeypatch.undo()
     assert v == 2  # committed on top of the REAL latest (v1)
     got = sorted(r["k"] for r in L.read_version(spark, t).collect())

@@ -15,13 +15,14 @@ alone.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_to_csv_spark.session import get_spark, read_codegen_failures  # noqa: E402
 from parquet_to_csv_spark.sources.tables import TABLE_NAMES  # noqa: E402
