@@ -1248,7 +1248,7 @@ def commit_deletes(
             "segments": man2["segments"],
             "delete_segments": man2.get("delete_segments", [])
             + [new_del_entry],
-            **_carry(man2, "schema", "merge_schema"),
+            **_carry(man2, "schema", "merge_schema", "transforms"),
         }
 
     return _commit_next(table_dir, make, max_attempts)
@@ -1295,7 +1295,7 @@ def _commit_with_vector(
             "mode": mode,
             "segments": man["segments"] + [new_entry],
             "delete_segments": man.get("delete_segments", []) + [del_entry],
-            **_carry(man, "schema", "merge_schema"),
+            **_carry(man, "schema", "merge_schema", "transforms"),
         }
 
     def drop_vector():
@@ -3733,17 +3733,21 @@ def commit_partitioned(
 
     def make(prev, man):
         segs: list[dict] = []
+        carried: dict = {}
         # current spec first, then every spec any live file was
         # written under (the pruning-key universe)
         spec_union = list(names)
         if mode == "append" and man is not None:
             segs = man["segments"]
+            # the carried files keep their delete vectors
+            carried = _carry(man, "delete_segments")
             for t in man.get("transforms", []):
                 if t not in spec_union:
                     spec_union.append(t)
         return {
             "mode": mode,
             "segments": segs + [new_entry],
+            **carried,
             # logical schema = the SOURCE schema; transforms are derived
             "schema": df.schema.jsonValue(),
             "transforms": spec_union,
@@ -3844,7 +3848,9 @@ def read_hidden_partitioned(
     and TWO-LEVEL since round 8: segments whose manifest-list
     ``pstats`` (per-transform value rollups) exclude the predicate are
     skipped without opening their segment JSON, then per-file tuples
-    prune within the survivors — no file is opened to decide."""
+    prune within the survivors — no file is opened to decide. The
+    snapshot's position delete vectors are anti-joined out, as in
+    :func:`read_version`."""
     from pyspark.sql.types import StructType
 
     def _tuple_ok(tup: dict) -> bool:
@@ -3893,7 +3899,11 @@ def read_hidden_partitioned(
     if not keep:
         df = spark.createDataFrame([], schema)
     else:
-        df = spark.read.schema(schema).parquet(*keep)
+        df = _minus_deletes(
+            spark,
+            spark.read.schema(schema).parquet(*keep),
+            _man_delete_files(table_dir, man),
+        )
     return df, len(keep), n_total
 
 

@@ -18,6 +18,8 @@ are the knobs that keep a 100 TB/day stream bounded.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_to_csv_spark.functions.stable import stable_sum_2dp
@@ -25,7 +27,9 @@ from parquet_to_csv_spark.functions.stable import stable_sum_2dp
 
 def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     """Stream the events table layout (ts = ns-epoch long) from a
-    parquet directory, one file per micro-batch discovery."""
+    parquet directory. Each micro-batch takes at most 8 new files
+    (``maxFilesPerTrigger``), so a directory of up to 8 files drains in
+    one batch and a larger one in ceil(files / 8)."""
     schema = (
         "event_id long, ts long, user_id long, event_type string, "
         "value double, props string"
@@ -81,33 +85,49 @@ def streaming_sessions(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _state_width(spark: SparkSession, n: int):
+    """Start the block's streaming queries with ``n`` state partitions:
+    set ``spark.sql.shuffle.partitions`` to ``n`` and restore it on
+    exit. A query pins its state-store partition count from that conf
+    when it writes its first checkpoint, so the scope must cover
+    ``start()``; every drain here is synchronous (``availableNow`` plus
+    ``awaitTermination``), so it covers the whole run. No lock is held,
+    unlike ``timeops.scoped_session_conf``, because the block runs a
+    whole query."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def run_to_memory(
     stream_df: DataFrame,
     table_name: str,
     spark: SparkSession,
     output_mode: str = "complete",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain a (bounded) stream into an in-memory table and return the
     batch result — availableNow processes all pending input then stops.
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` to the
-    query START (a streaming query pins its state-store partition
-    count from that conf at first checkpoint; it cannot be changed
-    later): a stateful drain instantiates one state store per
-    partition per stateful operator per micro-batch — a stream-stream
-    join is FOUR keyed stores, so a 2-file staged drain at the batch
-    default of 32 partitions pays 128 store open/commit cycles per
-    batch for kilobytes of state. 8 is the honest sizing for the
-    staged fixtures; a production deployment sizes this to its stream
-    volume exactly the same way. Values are partition-count-invariant
-    (the same oracle gates every drain). The conf is restored before
-    returning, and the drain is synchronous, so no other query can
-    observe the override."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    The query starts with ONE state partition. Each stateful operator
+    loads, commits and checksums one state store per partition per
+    micro-batch (four files per store per batch in Spark 4.1, however
+    few rows it holds); for the kilobytes of state a drain here holds,
+    that fixed cost outweighs the state work (8 partitions about
+    doubled a drain's CPU on 4 cores). The memory sink is Spark's low-volume sink: it
+    collects its whole output into the driver, and every drain that
+    reaches it is a bounded fixture of a few MB, so one partition
+    holds all of its state. The scan ahead of the state shuffle stays
+    parallel, and results do not depend on the partition count (the
+    same oracle gates every drain). A checkpoint keeps the width it
+    started with: a query restarted on an existing checkpoint (a
+    ``checkpointLocation`` reused across runs) keeps that checkpoint's
+    partition count whatever the conf says."""
+    with _state_width(spark, 1):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(table_name)
@@ -116,9 +136,6 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(table_name)
 
 
@@ -851,9 +868,7 @@ def backpressure_drain_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(ledger)
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_width(spark, 8):
         q = (
             stream.writeStream.foreachBatch(_partial)
             .option("checkpointLocation", ckpt)
@@ -861,8 +876,6 @@ def backpressure_drain_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     parts = spark.read.parquet(ledger)
     nb = F.broadcast(
@@ -1003,9 +1016,7 @@ def statestore_introspection_drain(spark: SparkSession, sf_dir: str) -> DataFram
     ckpt = tempfile.mkdtemp(prefix="ss_introspect_")
     src = read_event_stream(spark, stage)
     counts = src.groupBy("event_type").count()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_width(spark, 8):
         q = (
             counts.writeStream.format("memory")
             .queryName("t_ss_sink_" + _uuid.uuid4().hex[:8])
@@ -1015,8 +1026,6 @@ def statestore_introspection_drain(spark: SparkSession, sf_dir: str) -> DataFram
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -1048,9 +1057,7 @@ def state_metadata_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="ss_meta_")
     src = read_event_stream(spark, stage)
     agg = src.dropDuplicates(["event_id"]).groupBy("event_type").count()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_width(spark, 8):
         q = (
             agg.writeStream.format("memory")
             .queryName("t_ssmeta_" + _uuid.uuid4().hex[:8])
@@ -1060,8 +1067,6 @@ def state_metadata_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     meta = spark.read.format("state-metadata").load(ckpt)
     return meta.select(
         F.col("operatorId").cast("long").alias("operator_id"),
@@ -1137,9 +1142,7 @@ def streaming_throughput(
         q.awaitTermination()
         return time.perf_counter() - t0
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_width(spark, 8):
         stateless = _source().filter(F.col("value") > 0).select(
             "event_id", "event_type",
             F.expr("cast(floor(value * 100 + 0.5) as long)").alias("cents"),
@@ -1167,8 +1170,6 @@ def streaming_throughput(
         dedup_state_rows = (
             spark.read.format("statestore").load(dedup_ckpt).count()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     def rate(w: float) -> int:
         return int(n_rows / w) if w > 0 else -1
@@ -1232,9 +1233,7 @@ def streaming_merge_sink_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _merge(batch_df: DataFrame, batch_id: int) -> None:
             layout.merge_into(spark, tdir, batch_df, "event_id")
 
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with _state_width(spark, 8):
             q = (
                 stream.writeStream.foreachBatch(_merge)
                 .option("checkpointLocation", os.path.join(stage, "ckpt"))
@@ -1242,8 +1241,6 @@ def streaming_merge_sink_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     root = _staged_once(spark, sf_dir, "events", "mergesink_", _build)
     return (
@@ -1281,9 +1278,7 @@ def rocksdb_state_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="rocksdb_state_")
     src = read_event_stream(spark, stage)
     counts = src.groupBy("event_type").count()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_width(spark, 8):
         with scoped_session_conf(
             spark,
             "spark.sql.streaming.stateStore.providerClass",
@@ -1298,8 +1293,6 @@ def rocksdb_state_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # expose the checkpoint for the engagement pytest
     rocksdb_state_drain.last_checkpoint = ckpt  # type: ignore[attr-defined]
     state = spark.read.format("statestore").load(ckpt)

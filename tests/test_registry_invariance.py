@@ -14,6 +14,13 @@ EXACTLY (same bar as the driver's value-hash):
   map-side partition boundaries (the property that actually breaks on
   a real cluster, where input splits differ run to run).
 
+The 3 never reaches a streaming drain's state stores: every drain sets
+the width its query starts with and overrides this conf
+(``stream.run_to_memory`` one partition, six drains in
+``streaming/stream.py`` 8), so this sweep varies no drain's width, the
+swept ``state_metadata_report`` included. ``tests/test_stream_state_width.py``
+is the test that drains one stream at two widths.
+
 This consolidates and supersedes the older partial sweeps
 (test_invariance_sweep / test_batch_j_invariance /
 test_batch_k_invariance / test_round4_invariance, ~150 queries at

@@ -128,6 +128,37 @@ def test_partition_evolution_conservative_keep(spark, tmp_path):
         L.read_hidden_partitioned(spark, troot, {"nope": 1})
 
 
+def test_hidden_partitioning_keeps_delete_vectors(spark, tmp_path):
+    """A delete vector survives on a hidden-partitioned table: the
+    delete keeps the partition spec, a partitioned append keeps the
+    vector, and the read applies it. A merge keeps the spec too."""
+    t = str(tmp_path / "hpd")
+    df = spark.range(0, 20).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    spec = [("pk", F.col("k") % 2)]
+    L.commit_partitioned(spark, t, df, spec)
+    L.commit_deletes(spark, t, "k < 5")
+    sub, _, _ = L.read_hidden_partitioned(spark, t, {"pk": (0, 1)})
+    assert sub.count() == 15
+    evens, _, _ = L.read_hidden_partitioned(spark, t, {"pk": 0})
+    assert sorted(r["k"] for r in evens.collect()) == list(range(6, 20, 2))
+    L.commit_partitioned(
+        spark, t, spark.range(20, 22).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        ), spec, mode="append",
+    )
+    full, _, _ = L.read_hidden_partitioned(spark, t, None)
+    assert full.count() == 17
+    assert L.read_version(spark, t).count() == 17
+    L.merge_into(
+        spark, t, spark.createDataFrame([(6, -1)], "k long, v long"), "k"
+    )
+    merged, _, _ = L.read_hidden_partitioned(spark, t, {"pk": (0, 1)})
+    rows = sorted((r["k"], r["v"]) for r in merged.collect())
+    assert len(rows) == 17 and (6, -1) in rows and (6, 60) not in rows
+
+
 def test_merge_delete_branch_semantics(spark, tmp_path):
     """DELETE-branch keys vanish; overlap with the upsert branch is
     rejected; everything lands in one version."""
