@@ -13,8 +13,9 @@ framing — no native library needed:
   unions as index + value; enum as int index; fixed as raw bytes.
 - Object Container File: magic ``Obj\\x01``, a metadata map carrying
   ``avro.schema`` (JSON) + ``avro.codec``, a 16-byte sync marker, then
-  (count, size, payload, sync) data blocks. Codecs: ``null`` and
-  ``deflate`` (raw RFC-1951 via stdlib zlib, wbits=-15).
+  (count, size, payload, sync) data blocks. Codecs: ``null``,
+  ``deflate`` (raw RFC-1951 via stdlib zlib, wbits=-15) and ``snappy``
+  (raw snappy through pyarrow, plus a big-endian CRC32 per block).
 
 Spark integration (the E319 Python DataSource surface):
 
@@ -45,6 +46,36 @@ import zlib
 
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
+
+
+# ---------------------------------------------------------------------------
+# snappy blocks (raw snappy format, through pyarrow's bundled library)
+# ---------------------------------------------------------------------------
+
+
+def snappy_compress(data: bytes) -> bytes:
+    import pyarrow as pa
+
+    return pa.Codec("snappy").compress(data).to_pybytes()
+
+
+def snappy_decompress(block: bytes) -> bytes:
+    """Decode one raw snappy stream. Its decoded length is the stream's
+    own leading varint, read exactly: pyarrow zero-fills a size that is
+    too large instead of rejecting it. A corrupt stream (a truncated
+    varint included) raises ``ValueError``."""
+    import pyarrow as pa
+
+    n = shift = 0
+    for b in block:
+        n |= (b & 0x7F) << shift
+        if not b & 0x80:
+            break
+        shift += 7
+    try:
+        return pa.Codec("snappy").decompress(block, n).to_pybytes()
+    except OSError as e:
+        raise ValueError(f"snappy: {e}") from e
 
 
 # ---------------------------------------------------------------------------
@@ -284,10 +315,6 @@ def write_ocf(
         elif codec == "snappy":
             # Avro snappy framing: snappy(raw) + 4-byte BIG-ENDIAN
             # CRC32 of the UNCOMPRESSED bytes
-            from parquet_to_csv_spark.functions.snappycodec import (
-                snappy_compress,
-            )
-
             data = snappy_compress(data) + struct.pack(
                 ">I", zlib.crc32(data) & 0xFFFFFFFF
             )
@@ -311,7 +338,7 @@ def write_ocf(
 
 
 def read_ocf(path: str):
-    """Iterate dict rows from one Avro OCF (null/deflate codecs).
+    """Iterate dict rows from one Avro OCF (null/deflate/snappy codecs).
     Returns (schema, iterator)."""
     buf = open(path, "rb").read()
     if buf[:4] != MAGIC:
@@ -349,10 +376,6 @@ def read_ocf(path: str):
             if codec == "deflate":
                 data = zlib.decompress(data, -15)
             elif codec == "snappy":
-                from parquet_to_csv_spark.functions.snappycodec import (
-                    snappy_decompress,
-                )
-
                 crc = struct.unpack(">I", data[-4:])[0]
                 data = snappy_decompress(data[:-4])
                 if zlib.crc32(data) & 0xFFFFFFFF != crc:

@@ -750,6 +750,11 @@ def _carry(man: dict, *keys: str) -> dict:
     return {k: man[k] for k in keys if man.get(k)}
 
 
+# What a manifest that keeps ``man``'s rows carries besides its
+# segments: delete vectors, schema and the hidden-partition spec.
+_TABLE_KEYS = ("delete_segments", "schema", "merge_schema", "transforms")
+
+
 def _parquet_files(data_dir: str) -> list[str]:
     """The sorted parquet files a writer left under ``data_dir``."""
     import os
@@ -1149,7 +1154,7 @@ def commit_version(
             "mode": mode,
             "segments": base["segments"] + [new_entry],
             "schema": schema.jsonValue(),
-            **_carry(base, "delete_segments"),
+            **_carry(base, "delete_segments", "transforms"),
         }
         if evolved or base.get("merge_schema"):
             manifest["merge_schema"] = True
@@ -2408,7 +2413,7 @@ def clone_table(src_dir: str, dst_dir: str) -> int:
         # no file list rewrite, no data bytes
         "segments": man["segments"],
         "cloned_from": {"table": src_dir, "version": src_v},
-        **_carry(man, "delete_segments", "schema", "merge_schema"),
+        **_carry(man, *_TABLE_KEYS),
     }
     _commit_next(
         dst_dir,
@@ -3267,7 +3272,7 @@ def restore_table(
         # zero-copy at both levels: segment entries re-referenced verbatim
         "segments": man["segments"],
         "restored_from": to_version,
-        **_carry(man, "delete_segments", "schema", "merge_schema"),
+        **_carry(man, *_TABLE_KEYS),
     }
     return _commit_next(
         table_dir,
@@ -3578,7 +3583,7 @@ def optimize_batches(
                 table_dir, man2["segments"], set(subset)
             )
             + [new_entry],
-            **_carry(man2, "delete_segments", "schema", "merge_schema"),
+            **_carry(man2, *_TABLE_KEYS),
         }
 
     return _commit_next(table_dir, make)
@@ -3826,9 +3831,7 @@ def rewrite_segments(
         return {
             "mode": "rewrite_manifests",
             "segments": [_segment_entry(table_dir, merged)],
-            **_carry(
-                man, "delete_segments", "schema", "merge_schema", "transforms"
-            ),
+            **_carry(man, *_TABLE_KEYS),
         }
 
     return _commit_next(table_dir, make, max_attempts)

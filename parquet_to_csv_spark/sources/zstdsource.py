@@ -1,30 +1,29 @@
-"""`.zst` TEXT source/sink on the Spark 4 Python DataSource surface.
+"""`.zst` / `.lz4` TEXT source/sink on the Spark 4 Python DataSource surface.
 
-Round 11: closes the SURVEY §2.7 "zstd TEXT codec" boundary end to
-end. Hadoop's ZStandardCodec needs libzstd (absent in this
-container), so `spark.read.text("*.zst")` cannot work JVM-side — but
-the format itself is public (RFC 8878) and `functions/zstdcodec.py`
-decodes it from-spec in pure Python, with pyarrow's bundled real zstd
-as the fast path when present:
+Closes the SURVEY §2.7 "zstd TEXT codec" boundary end to end.
+Hadoop's ZStandardCodec needs libzstd (absent in this container), so
+`spark.read.text("*.zst")` cannot work JVM-side. pyarrow, already the
+package's Parquet library, bundles real zstd and lz4 and is the one
+codec here: there is no option to pick a decoder.
 
 - ``read_text_zst(spark, glob)`` — the ``pyzst`` DataSource: one
   partition per FILE (the parallelism unit of every compressed-text
   source at 100 TB — .zst files, like .gz, are not splittable without
   a seek table), each executor decompresses its file and yields a
   ``value: string`` row per line, exactly like ``spark.read.text``.
+  Decoding streams through ``pa.CompressedInputStream``, which needs no
+  decompressed size, so foreign frames without a content size (CLI
+  tools, streaming writers) read like our own.
 - ``write_text_zst(df, path, level)`` — a DataSourceWriter sink: one
-  ``part-*.zst`` per task (job-unique names — append-safe), real
-  zstd compression through pyarrow when available, spec-legal
-  store-mode frames otherwise.
-
-``engine="pure"`` forces the from-spec decoder (tests pin both
-engines byte-equal); ``"auto"`` prefers pyarrow.
+  ``part-*.zst`` per task (job-unique names — append-safe), compressed
+  one-shot by ``pa.Codec`` at ``level``.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -33,18 +32,6 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from parquet_to_csv_spark.functions.lz4codec import (
-    lz4_compress_store,
-    lz4_decompress,
-)
-from parquet_to_csv_spark.functions.zstdcodec import (
-    zstd_compress_store,
-    zstd_decompress,
-)
-
-_PURE = {"zstd": zstd_decompress, "lz4": lz4_decompress}
-_STORE = {"zstd": zstd_compress_store, "lz4": lz4_compress_store}
-
 
 def _codec_of(path: str, option: str | None) -> str:
     if option:
@@ -52,23 +39,10 @@ def _codec_of(path: str, option: str | None) -> str:
     return "lz4" if path.endswith(".lz4") else "zstd"
 
 
-def _decompress(payload: bytes, engine: str, codec: str) -> bytes:
-    pure = _PURE[codec]
-    if engine == "pure":
-        return pure(payload)
-    try:
-        import pyarrow as pa
-
-        if pa.Codec.is_available(codec):
-            # frame content size is present in our own sinks' frames;
-            # foreign frames without it fall through to the pure path
-            try:
-                return bytes(pa.Codec(codec).decompress(payload))
-            except Exception:
-                pass
-    except Exception:
-        pass
-    return pure(payload)
+def _decompress(payload: bytes, codec: str) -> bytes:
+    """Every frame of ``payload`` (zstd, or lz4 frame format) decoded;
+    a corrupt frame raises ``OSError``."""
+    return pa.CompressedInputStream(pa.BufferReader(payload), codec).read()
 
 
 class _ZstFilePartition(InputPartition):
@@ -82,7 +56,6 @@ class ZstTextReader(DataSourceReader):
 
         pat = options["path"]
         self.paths = sorted(_glob.glob(pat)) or [pat]
-        self.engine = options.get("engine", "auto")
         self.codec = options.get("codec")
 
     def partitions(self):
@@ -90,9 +63,7 @@ class ZstTextReader(DataSourceReader):
 
     def read(self, partition: _ZstFilePartition):
         with open(partition.path, "rb") as f:
-            raw = _decompress(
-                f.read(), self.engine, _codec_of(partition.path, self.codec)
-            )
+            raw = _decompress(f.read(), _codec_of(partition.path, self.codec))
         text = raw.decode("utf-8")
         lines = text.split("\n")
         if lines and lines[-1] == "":
@@ -129,19 +100,8 @@ class ZstTextSinkWriter(DataSourceWriter):
         self.job_token = uuid.uuid4().hex[:12]
 
     def _compress(self, data: bytes) -> bytes:
-        try:
-            import pyarrow as pa
-
-            if pa.Codec.is_available(self.codec):
-                kw = (
-                    {"compression_level": self.level}
-                    if self.codec == "zstd"
-                    else {}
-                )
-                return bytes(pa.Codec(self.codec, **kw).compress(data))
-        except Exception:
-            pass
-        return _STORE[self.codec](data)
+        kw = {"compression_level": self.level} if self.codec == "zstd" else {}
+        return bytes(pa.Codec(self.codec, **kw).compress(data))
 
     def write(self, rows):
         import uuid
@@ -183,18 +143,13 @@ class ZstTextSinkDataSource(DataSource):
         return ZstTextSinkWriter(self.options)
 
 
-def read_text_zst(spark, path: str, engine: str = "auto",
-                  codec: str | None = None):
+def read_text_zst(spark, path: str, codec: str | None = None):
     """Read a file / glob of zstd- or lz4-compressed text, one
     partition per file, as a ``value: string`` DataFrame (the
     ``spark.read.text`` contract). The codec defaults from the file
     extension (``.lz4`` → lz4, else zstd)."""
     spark.dataSource.register(ZstTextDataSource)
-    reader = (
-        spark.read.format("pyzst")
-        .option("path", path)
-        .option("engine", engine)
-    )
+    reader = spark.read.format("pyzst").option("path", path)
     if codec:
         reader = reader.option("codec", codec)
     return reader.load()

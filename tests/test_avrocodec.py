@@ -227,14 +227,11 @@ def test_spark_roundtrip_lineitem_slice(spark, sf_dir, tmp_path):
     assert tuple(a) == tuple(b)
 
 
-# --- snappy codec (pure-Python, functions/snappycodec.py) ---------------------
+# --- snappy blocks (pyarrow's snappy through avrocodec's helpers) -------------
 
 
 def test_snappy_spec_tag_pins():
-    from parquet_to_csv_spark.functions.snappycodec import (
-        snappy_compress,
-        snappy_decompress,
-    )
+    snappy_compress, snappy_decompress = av.snappy_compress, av.snappy_decompress
 
     # hand-built streams per the format description's tag table
     # literal "hi", then 1-byte-offset copy (len 4, offset 2) -> hihihi

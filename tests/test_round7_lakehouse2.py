@@ -159,6 +159,52 @@ def test_hidden_partitioning_keeps_delete_vectors(spark, tmp_path):
     assert len(rows) == 17 and (6, -1) in rows and (6, 60) not in rows
 
 
+def _kv(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+
+
+def _plain_append(spark, t):
+    L.commit_version(spark, t, _kv(spark, 20, 24), mode="append")
+    return t
+
+
+def _clone(spark, t):
+    L.clone_table(t, t + "_clone")
+    return t + "_clone"
+
+
+def _restore(spark, t):
+    L.restore_table(spark, t, 0)
+    return t
+
+
+def _optimize(spark, t):
+    L.optimize_batches(spark, t)
+    return t
+
+
+@pytest.mark.parametrize(
+    "writer", [_plain_append, _clone, _restore, _optimize],
+    ids=["append", "clone", "restore", "optimize"],
+)
+def test_hidden_partition_spec_survives_writer(spark, tmp_path, writer):
+    """Every manifest writer keeps a hidden-partitioned table's spec:
+    afterwards a predicate read still resolves, and its even rows are
+    the snapshot's even rows."""
+    t = str(tmp_path / "hps")
+    L.commit_partitioned(spark, t, _kv(spark, 0, 20), [("pk", F.col("k") % 2)])
+    L.commit_deletes(spark, t, "k < 5")
+    t = writer(spark, t)
+    evens, _, _ = L.read_hidden_partitioned(spark, t, {"pk": 0})
+    got = sorted(r["k"] for r in evens.collect() if r["k"] % 2 == 0)
+    want = sorted(
+        r["k"] for r in L.read_version(spark, t).collect() if r["k"] % 2 == 0
+    )
+    assert got == want and got
+
+
 def test_merge_delete_branch_semantics(spark, tmp_path):
     """DELETE-branch keys vanish; overlap with the upsert branch is
     rejected; everything lands in one version."""

@@ -1,10 +1,10 @@
-"""Round 11: pure-Python Zstandard decoder + `.zst` text source/sink.
+"""`.zst` / `.lz4` text source/sink: pyarrow's bundled zstd and lz4
+decode every frame shape the source meets.
 
-Evidence pattern of the codec series (FLAC/WebP/Avro/GIF): spec pins
-by hand-built frames for decoder-only paths, and pyarrow's BUNDLED
-REAL zstd as a cross-oracle — every frame pyarrow emits at every
-compression level must decode byte-identically, and every store-mode
-frame this repo emits must decode through real zstd."""
+Spec pins by hand-built frames (RLE block, reserved block, dictionary
+id, bad magic, skippable frames) and pinned frames carrying checksums
+(pyarrow writes none) go through the source's decode function; the
+Spark tests drive whole files through the ``pyzst`` DataSource."""
 
 from __future__ import annotations
 
@@ -17,52 +17,40 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-import parquet_to_csv_spark.functions.zstdcodec as zc
 import parquet_to_csv_spark.sources.zstdsource as zs
 
-pytestmark = pytest.mark.skipif(
-    not pa.Codec.is_available("zstd"),
-    reason="pyarrow zstd oracle unavailable",
+# A checksummed zstd store frame (raw block, 8-byte content size,
+# xxh64 content checksum) of b"checked payload": 35 bytes.
+CHECKED_FRAME = bytes.fromhex(
+    "28b52ffde40f00000000000000790000636865636b6564207061796c6f6164bbd21720"
+)
+# The same frame layout around an empty payload.
+EMPTY_FRAME = bytes.fromhex("28b52ffde4000000000000000001000099e9d851")
+# A stored-block lz4 frame of b"store " * 2000: descriptor with content
+# size and content checksum, header checksum 0xa1, one stored block,
+# EndMark, content xxh32.
+LZ4_STORE_FRAME = (
+    bytes.fromhex("04224d186c70e02e000000000000a1")
+    + struct.pack("<I", (1 << 31) | 12000)
+    + b"store " * 2000
+    + bytes(4)
+    + bytes.fromhex("1db4a8c5")
 )
 
 
-# --- xxh64 (public test vectors) -----------------------------------------------
-
-
-def test_xxh64_reference_vectors():
-    assert zc.xxh64(b"") == 0xEF46DB3751D8E999
-    assert zc.xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert zc.xxh64(b"abc") == 0x44BC2CF5AD770999
-    assert zc.xxh64(b"abcd") == 0xDE0327B0D25D92CC
-    # 32+ byte path (stripes) against a pinned value computed once
-    # from the reference implementation's published behavior
-    data = bytes(range(64))
-    assert zc.xxh64(data) & 0xFFFFFFFF == zc.xxh64(data) % (1 << 32)
-    assert zc.xxh64(b"hello world hello world hello world!!") != 0
+def _zstd(payload: bytes) -> bytes:
+    return zs._decompress(payload, "zstd")
 
 
 # --- spec pins -----------------------------------------------------------------
 
 
-def test_store_frame_layout_and_real_zstd_reads_it():
-    data = b"store mode round trip " * 500
-    frame = zc.zstd_compress_store(data)
-    magic, fhd = struct.unpack_from("<IB", frame, 0)
-    assert magic == 0xFD2FB528
-    assert fhd >> 6 == 3 and (fhd >> 5) & 1 == 1  # FCS 8B, single-segment
-    (fcs,) = struct.unpack_from("<Q", frame, 5)
-    assert fcs == len(data)
-    # real zstd (pyarrow) decodes our frame
-    assert bytes(pa.Codec("zstd").decompress(frame, len(data))) == data
-    # and so does the pure decoder, verifying the checksum
-    assert zc.zstd_decompress(frame) == data
-
-
 def test_checksum_verification():
-    frame = bytearray(zc.zstd_compress_store(b"checked payload"))
+    assert _zstd(CHECKED_FRAME) == b"checked payload"
+    frame = bytearray(CHECKED_FRAME)
     frame[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="checksum"):
-        zc.zstd_decompress(bytes(frame))
+    with pytest.raises(OSError, match="checksum"):
+        _zstd(bytes(frame))
 
 
 def test_rle_block_and_empty_frame():
@@ -72,22 +60,25 @@ def test_rle_block_and_empty_frame():
     buf += struct.pack("<H", 1000 - 256)
     buf += ((1000 << 3) | (1 << 1) | 1).to_bytes(3, "little")  # RLE last
     buf += b"Z"
-    assert zc.zstd_decompress(bytes(buf)) == b"Z" * 1000
+    assert _zstd(bytes(buf)) == b"Z" * 1000
     # empty input, store mode
-    assert zc.zstd_decompress(zc.zstd_compress_store(b"")) == b""
+    assert _zstd(EMPTY_FRAME) == b""
 
 
 def test_reserved_block_and_dictionary_rejected():
     buf = bytearray(struct.pack("<IB", 0xFD2FB528, 0x20))
     buf += bytes([0])  # FCS=0 via 1-byte field (single segment)
     buf += ((5 << 3) | (3 << 1) | 1).to_bytes(3, "little")  # reserved type
-    with pytest.raises(ValueError, match="reserved block"):
-        zc.zstd_decompress(bytes(buf))
+    with pytest.raises(OSError, match="corruption"):
+        _zstd(bytes(buf))
     hdr = struct.pack("<IB", 0xFD2FB528, 0x21)  # dictionary-id flag
-    with pytest.raises(ValueError, match="dictionary"):
-        zc.zstd_decompress(hdr + b"\x00" * 8)
-    with pytest.raises(ValueError, match="magic"):
-        zc.zstd_decompress(b"\x00\x01\x02\x03rest")
+    # dictionary id 0 means "no dictionary": this frame is cut short
+    with pytest.raises(OSError, match="Truncated"):
+        _zstd(hdr + b"\x00" * 8)
+    with pytest.raises(OSError, match="Dictionary mismatch"):
+        _zstd(hdr + bytes([7]) + b"\x00" * 7)
+    with pytest.raises(OSError, match="Unknown frame descriptor"):
+        _zstd(b"\x00\x01\x02\x03rest")
 
 
 def test_skippable_and_multi_frame():
@@ -95,15 +86,14 @@ def test_skippable_and_multi_frame():
     f1 = bytes(c.compress(b"first " * 50))
     f2 = bytes(c.compress(b"second " * 50))
     skip = struct.pack("<II", 0x184D2A5F, 4) + b"meta"
-    out = zc.zstd_decompress(f1 + skip + f2)
+    out = _zstd(f1 + skip + f2)
     assert out == b"first " * 50 + b"second " * 50
-
-
-# --- cross-oracle sweep ----------------------------------------------------------
 
 
 @pytest.mark.parametrize("level", [1, 3, 9, 19])
 def test_decode_matches_real_zstd(level):
+    """The sink's one-shot frames at each ``level`` decode through the
+    source's streaming decoder."""
     random.seed(level)
     words = [b"spark", b"zstd", b"frame", b"lake", b"graft", b"\xc3\xa9"]
     payloads = [
@@ -118,29 +108,41 @@ def test_decode_matches_real_zstd(level):
     ]
     c = pa.Codec("zstd", compression_level=level)
     for p in payloads:
-        assert zc.zstd_decompress(bytes(c.compress(p))) == p
-
-
-def test_decode_fuzz_small_payloads():
-    random.seed(7)
-    for k in range(120):
-        n = random.randint(0, 3000)
-        style = k % 3
-        if style == 0:
-            p = random.randbytes(n)
-        elif style == 1:
-            p = bytes(random.choices(b"abcdef \n", k=n))
-        else:
-            p = random.choice([b"ab", b"xyz"]) * (n // 2 + 1)
-        lvl = random.choice([1, 3, 12, 19])
-        enc = bytes(pa.Codec("zstd", compression_level=lvl).compress(p))
-        assert zc.zstd_decompress(enc) == p, (k, style, lvl, n)
+        assert _zstd(bytes(c.compress(p))) == p
 
 
 def test_multiblock_over_128k():
     p = (b"multi block window " * 20000)  # ~380 KB -> >1 block
     enc = bytes(pa.Codec("zstd", compression_level=3).compress(p))
-    assert zc.zstd_decompress(enc) == p
+    assert _zstd(enc) == p
+
+
+def test_streaming_mode_frames_from_compressed_output_stream():
+    """CLI tools and pa.CompressedOutputStream emit WINDOWED frames
+    (no single-segment flag, no content size) — the frame-header path
+    the one-shot compressor never produces."""
+    expect = b"".join(
+        f"row-{i} streaming frame test\n".encode() for i in range(2000)
+    )
+    buf = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(buf, "zstd") as f:
+        f.write(expect)
+    enc = bytes(buf.getvalue())
+    assert enc[4] & 0x20 == 0  # windowed, not single-segment
+    assert _zstd(enc) == expect
+    buf2 = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(buf2, "lz4") as f:
+        f.write(expect)
+    assert zs._decompress(bytes(buf2.getvalue()), "lz4") == expect
+
+
+def test_lz4_store_frame_and_header_checksum():
+    assert zs._decompress(LZ4_STORE_FRAME, "lz4") == b"store " * 2000
+    # header checksum is verified
+    bad = bytearray(LZ4_STORE_FRAME)
+    bad[14] ^= 0xFF  # HC byte (4 magic + 2 FLG/BD + 8 size)
+    with pytest.raises(OSError, match="headerChecksum"):
+        zs._decompress(bytes(bad), "lz4")
 
 
 # --- Spark source/sink -----------------------------------------------------------
@@ -154,20 +156,15 @@ def test_spark_roundtrip_jsonl_zst(spark, sf_dir, tmp_path):
     zs.write_text_zst(src.repartition(3), out)
     parts = glob.glob(os.path.join(out, "part-*.zst"))
     assert len(parts) == 3
-    for engine in ("auto", "pure"):
-        back = zs.read_text_zst(
-            spark, os.path.join(out, "part-*.zst"), engine=engine
-        )
-        assert back.schema.simpleString() == "struct<value:string>"
-        assert back.rdd.getNumPartitions() == 3
-        a = sorted(r["value"] for r in src.collect())
-        b = sorted(r["value"] for r in back.collect())
-        assert a == b
-        # and the lines parse back to the source rows
-        parsed = spark.read.json(
-            back.rdd.map(lambda r: r["value"])
-        )
-        assert parsed.count() == docs.count()
+    back = zs.read_text_zst(spark, os.path.join(out, "part-*.zst"))
+    assert back.schema.simpleString() == "struct<value:string>"
+    assert back.rdd.getNumPartitions() == 3
+    a = sorted(r["value"] for r in src.collect())
+    b = sorted(r["value"] for r in back.collect())
+    assert a == b
+    # and the lines parse back to the source rows
+    parsed = spark.read.json(back.rdd.map(lambda r: r["value"]))
+    assert parsed.count() == docs.count()
 
 
 def test_spark_reads_foreign_real_zstd_file(spark, tmp_path):
@@ -176,12 +173,21 @@ def test_spark_reads_foreign_real_zstd_file(spark, tmp_path):
                 .compress(lines.encode()))
     p = tmp_path / "foreign.zst"
     p.write_bytes(enc)
-    for engine in ("auto", "pure"):
-        back = zs.read_text_zst(spark, str(p), engine=engine)
-        assert back.count() == 1000
-        assert back.agg(F.min("value"), F.max("value")).collect()[0] == (
-            "line-0", "line-999",
-        )
+    back = zs.read_text_zst(spark, str(p))
+    assert back.count() == 1000
+    assert back.agg(F.min("value"), F.max("value")).collect()[0] == (
+        "line-0", "line-999",
+    )
+
+
+def test_spark_read_rejects_corrupt_checksum(spark, tmp_path):
+    bad = bytearray(CHECKED_FRAME)
+    bad[-1] ^= 0xFF
+    p = tmp_path / "bad.zst"
+    p.write_bytes(bytes(bad))
+    with pytest.raises(Exception) as err:
+        zs.read_text_zst(spark, str(p)).collect()
+    assert "checksum" in str(err.value)
 
 
 def test_append_does_not_clobber(spark, tmp_path):
@@ -196,54 +202,6 @@ def test_append_does_not_clobber(spark, tmp_path):
     assert sorted(r["value"] for r in back.collect()) == ["a", "b", "c"]
 
 
-# --- lz4 sibling (functions/lz4codec.py through the same source) ---------------
-
-
-def test_lz4_xxh32_vectors_and_frame_pins():
-    import parquet_to_csv_spark.functions.lz4codec as lc
-
-    assert lc.xxh32(b"") == 0x02CC5D05
-    assert lc.xxh32(b"a") == 0x550D7456
-    assert lc.xxh32(b"abc") == 0x32D153FF
-    st = lc.lz4_compress_store(b"store " * 2000)
-    assert st[:4] == struct.pack("<I", 0x184D2204)
-    assert lc.lz4_decompress(st) == b"store " * 2000
-    if pa.Codec.is_available("lz4"):
-        assert bytes(pa.Codec("lz4").decompress(st, 12000)) == b"store " * 2000
-    # header checksum is verified
-    bad = bytearray(st)
-    bad[14] ^= 0xFF  # HC byte (4 magic + 2 FLG/BD + 8 size)
-    with pytest.raises(ValueError, match="header checksum"):
-        lc.lz4_decompress(bytes(bad))
-
-
-@pytest.mark.skipif(
-    not pa.Codec.is_available("lz4"), reason="pyarrow lz4 oracle unavailable"
-)
-def test_lz4_decode_matches_real_lz4():
-    import parquet_to_csv_spark.functions.lz4codec as lc
-
-    random.seed(13)
-    c = pa.Codec("lz4")
-    payloads = [
-        b" ".join(random.choice([b"lz", b"four", b"text"]) for _ in range(8000)),
-        b"B" * 150000,
-        random.randbytes(50000),
-        b"",
-        b"q",
-    ]
-    for p in payloads:
-        assert lc.lz4_decompress(bytes(c.compress(p))) == p
-    if pa.Codec.is_available("lz4_raw"):
-        cr = pa.Codec("lz4_raw")
-        for p in payloads:
-            if p:
-                assert bytes(lc.lz4_block_decompress(bytes(cr.compress(p)))) == p
-
-
-@pytest.mark.skipif(
-    not pa.Codec.is_available("lz4"), reason="pyarrow lz4 oracle unavailable"
-)
 def test_spark_roundtrip_lz4_text(spark, tmp_path):
     src = spark.createDataFrame(
         [(f"row-{i}",) for i in range(500)], "value string"
@@ -252,32 +210,7 @@ def test_spark_roundtrip_lz4_text(spark, tmp_path):
     zs.write_text_zst(src.repartition(2), out, codec="lz4")
     parts = glob.glob(os.path.join(out, "part-*.lz4"))
     assert len(parts) == 2
-    for engine in ("auto", "pure"):
-        back = zs.read_text_zst(
-            spark, os.path.join(out, "part-*.lz4"), engine=engine
-        )
-        assert sorted(r["value"] for r in back.collect()) == sorted(
-            r["value"] for r in src.collect()
-        )
-
-
-def test_streaming_mode_frames_from_compressed_output_stream():
-    """CLI tools and pa.CompressedOutputStream emit WINDOWED frames
-    (no single-segment flag, no content size) — the frame-header path
-    the one-shot compressor never produces."""
-    import parquet_to_csv_spark.functions.lz4codec as lc
-
-    expect = b"".join(
-        f"row-{i} streaming frame test\n".encode() for i in range(2000)
+    back = zs.read_text_zst(spark, os.path.join(out, "part-*.lz4"))
+    assert sorted(r["value"] for r in back.collect()) == sorted(
+        r["value"] for r in src.collect()
     )
-    buf = pa.BufferOutputStream()
-    with pa.CompressedOutputStream(buf, "zstd") as f:
-        f.write(expect)
-    enc = bytes(buf.getvalue())
-    assert enc[4] & 0x20 == 0  # windowed, not single-segment
-    assert zc.zstd_decompress(enc) == expect
-    if pa.Codec.is_available("lz4"):
-        buf2 = pa.BufferOutputStream()
-        with pa.CompressedOutputStream(buf2, "lz4") as f:
-            f.write(expect)
-        assert lc.lz4_decompress(bytes(buf2.getvalue())) == expect
